@@ -10,7 +10,13 @@ Spark-first design for 100 TB:
 - MinHash+LSH = k slice-permutation minhashes (one md5 digest per
   shingle, four 32-bit hex slices) via explode + grouped MIN → band
   hashes → bucket join produces candidates only (sub-quadratic), then
-  candidate-restricted exact-Jaccard verify
+  candidate-restricted exact-Jaccard verify over each document's
+  distinct-shingle array (``array_intersect``; no exploded rows)
+- duplicate clusters = min-label connected components with pointer
+  jumping: labels start at each node's closed-neighbourhood min, and
+  convergence is counted by an observed metric inside each round's
+  lineage-cutting checkpoint, so a batch of 2-node components costs
+  one round and no extra convergence job
 - SimHash = per-token 16-bit md5 projections, bit-majority vote via
   explode + grouped per-bit SUMs
 
@@ -176,29 +182,23 @@ def near_dup_pairs_jaccard(
         .groupBy(F.col("a.doc").alias("a"), F.col("b.doc").alias("b"))
         .agg(F.count(F.lit(1)).alias("inter"))
     )
+    scored = (
+        inter.join(sizes.select(F.col("doc").alias("a"), F.col("sz").alias("size_a")), "a")
+        .join(sizes.select(F.col("doc").alias("b"), F.col("sz").alias("size_b")), "b")
+        .withColumn("jaccard", _jaccard("inter", "size_a", "size_b"))
+    )
     return (
-        _jaccard_scores(inter, sizes)
-        .filter(F.col("jaccard") >= threshold)
+        scored.filter(F.col("jaccard") >= threshold)
         .select("a", "b", "inter", "size_a", "size_b", "jaccard")
     )
 
 
-def _jaccard_scores(inter: DataFrame, sizes: DataFrame) -> DataFrame:
-    """Attach size_a/size_b and the rounded Jaccard score to an
-    (a, b, inter) pair frame — the ONE definition of the score used by
-    both the exact path and the LSH-verified path, so they cannot
-    diverge (the bucketed-⊆-exact equal-scores contract depends on it).
-    """
-    return (
-        inter.join(sizes.select(F.col("doc").alias("a"), F.col("sz").alias("size_a")), "a")
-        .join(sizes.select(F.col("doc").alias("b"), F.col("sz").alias("size_b")), "b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")), 6
-            ),
-        )
-    )
+def _jaccard(inter: str, size_a: str, size_b: str):
+    """The rounded Jaccard score of a pair from its intersection and set
+    sizes — the ONE definition of the score used by both the exact path
+    and the LSH-verified path, so they cannot diverge (the
+    bucketed-⊆-exact equal-scores contract depends on it)."""
+    return F.round(F.col(inter) / (F.col(size_a) + F.col(size_b) - F.col(inter)), 6)
 
 
 def minhash_signatures(
@@ -488,12 +488,23 @@ def near_dup_pairs_minhash_lsh(
 
     Bands of k/bands rows each; candidates = pairs sharing any band
     bucket. Verification computes exact Jaccard ONLY over candidate
-    pairs: candidate (a, b) is joined to a's shingles, then matched to
-    b's shingles on (b, shingle), and only that restricted set hits the
-    intersection groupBy — sub-quadratic end-to-end. (An all-pairs
-    shingle self-join before candidate restriction would defeat LSH at
-    scale: at 100 TB the self-join output is O(corpus²) in hot
-    shingles while the candidate set is ~linear.)
+    pairs: candidate (a, b) is joined to a's and to b's distinct-shingle
+    array (``_with_shingles``), and the pair scores from the arrays
+    alone — ``inter = size(array_intersect(sa, sb))``, ``size_a =
+    size(sa)``, ``size_b = size(sb)``, then the shared rounded-Jaccard
+    formula. That is two joins keyed by document, with no exploded
+    shingle rows, no (b, shingle) join, no intersection groupBy and no
+    size lookups. (An all-pairs shingle self-join before candidate
+    restriction would defeat LSH at scale: at 100 TB the self-join
+    output is O(corpus²) in hot shingles while the candidate set is
+    ~linear.)
+
+    Shuffle bound (100 TB lens): the verify joins move each candidate
+    pair with its two documents' shingle arrays, i.e. O(#candidates ×
+    shingle bytes per document) — linear in the candidate set, the same
+    volume the exploded form moved as (pair, shingle) rows, minus the
+    per-row overhead. A document in many candidate pairs is copied once
+    per pair either way.
     """
     assert k % bands == 0
     rows = k // bands
@@ -518,18 +529,21 @@ def near_dup_pairs_minhash_lsh(
         .select(F.col("l.doc").alias("a"), F.col("r.doc").alias("b"))
         .distinct()
     )
-    sh = exploded_shingles(df, id_col, text_col, n)
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    # candidate-restricted intersection: shingles of a for each candidate
-    # pair, matched against b's shingles — never an all-pairs self-join
-    a_sh = cands.join(sh.select(F.col("doc").alias("a"), "shingle"), "a")
-    inter = (
-        a_sh.join(sh.select(F.col("doc").alias("b"), "shingle"), ["b", "shingle"])
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("inter"))
+    # candidate-restricted verify: each candidate pair meets the two
+    # documents' distinct-shingle arrays — never an all-pairs self-join
+    sh = _with_shingles(df, id_col, text_col, n)
+    scored = (
+        cands.join(sh.select(F.col(id_col).alias("a"), F.col("__sh").alias("__sa")), "a")
+        .join(sh.select(F.col(id_col).alias("b"), F.col("__sh").alias("__sb")), "b")
+        .select(
+            "a", "b",
+            F.size(F.array_intersect("__sa", "__sb")).alias("inter"),
+            F.size("__sa").alias("size_a"),
+            F.size("__sb").alias("size_b"),
+        )
     )
     return (
-        _jaccard_scores(inter, sizes)
+        scored.withColumn("jaccard", _jaccard("inter", "size_a", "size_b"))
         .filter(F.col("jaccard") >= threshold)
         .select("a", "b", "jaccard")
     )
@@ -609,20 +623,34 @@ def duplicate_clusters(
     keeps.
 
     Algorithm: iterative min-label propagation with POINTER JUMPING.
-    Each round does (1) a neighbor-min step — every node takes the min of
-    its label and its neighbors' labels (one join + partial-agg groupBy) —
-    then (2) a pointer-jump — ``label(v) := label(label(v))`` (one
-    self-join), which halves pointer-chain depth. Together they converge
-    in O(log diameter) rounds, not O(diameter): a 10^6-long duplicate
-    chain resolves in ~20 rounds. This is the standard MapReduce-CC
-    shape (Kiveris et al., "Connected Components in MapReduce and
-    Beyond" — star contraction; pointer jumping is the classic PRAM
-    shortcut).
+    Labels start at the min of each node's closed neighbourhood
+    (``least(node, min(neighbours))``, one grouped MIN over the edges) —
+    the first neighbour-min step folded into initialisation, so every
+    2-node component is already resolved before round one. Each round
+    does (1) a neighbor-min step — every node takes the min of its label
+    and its neighbors' labels (one join + partial-agg groupBy) — then
+    (2) a pointer-jump — ``label(v) := label(label(v))`` (one self-join),
+    which halves pointer-chain depth. Together they converge in
+    O(log diameter) rounds, not O(diameter): a 10^6-long duplicate chain
+    resolves in ~20 rounds. This is the standard MapReduce-CC shape
+    (Kiveris et al., "Connected Components in MapReduce and Beyond" —
+    star contraction; pointer jumping is the classic PRAM shortcut).
+
+    Convergence is observed, not queried: each round carries the old
+    label beside the new one, and a ``DataFrame.observe`` metric counts
+    the labels that changed while the round's own ``localCheckpoint``
+    runs. A round that changes no label ends the loop, so a batch of
+    near-dup pairs costs one round and no separate convergence job. A
+    stable round is a fixpoint: every label equals its neighbours'
+    min, hence is constant on the component, and the component minimum
+    keeps its own id from initialisation on.
 
     Scale notes (100 TB lens):
     - Per round: two shuffles (neighbor groupBy, pointer-jump join) over
       #edges and #nodes rows — no step is ever quadratic, and labels only
-      decrease so late rounds shuffle mostly-stable data.
+      decrease so late rounds shuffle mostly-stable data. The change
+      count rides the round's checkpoint job as an accumulator-style
+      metric (one long per task), never a join against the old labels.
     - ``localCheckpoint`` after every round cuts the lineage that would
       otherwise grow by ~4 plan levels per iteration (an iterative-loop
       requirement, not an optimization; on a real cluster with
@@ -632,6 +660,8 @@ def duplicate_clusters(
       the log-round bound only matters for adversarial chain graphs, but
       it costs nothing to have.
     """
+    from pyspark.sql import Observation
+
     # materialize once: pairs is often itself an expensive pipeline (LSH
     # candidate generation + verify) and edges is re-joined every round
     edges = pairs.select(
@@ -639,9 +669,11 @@ def duplicate_clusters(
     ).union(
         pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
     ).localCheckpoint()
+    # closed-neighbourhood min: min over {self} ∪ neighbors
     labels = (
-        edges.select(F.col("src").alias("node")).distinct()
-        .withColumn("cluster", F.col("node"))
+        edges.groupBy(F.col("src").alias("node"))
+        .agg(F.min("dst").alias("__nbmin"))
+        .select("node", F.least("node", "__nbmin").alias("cluster"))
         .localCheckpoint()
     )
     for _ in range(max_iter):
@@ -652,24 +684,29 @@ def duplicate_clusters(
             .agg(F.min("cluster").alias("__nbmin"))
         )
         stepped = labels.join(nb, "node", "left").select(
-            "node", F.least("cluster", "__nbmin").alias("cluster")
+            "node",
+            F.col("cluster").alias("__old"),
+            F.least("cluster", "__nbmin").alias("cluster"),
         )
         # (2) pointer jump: cluster(v) := cluster(cluster(v))
         jump = stepped.select(
             F.col("node").alias("cluster"), F.col("cluster").alias("__jmp")
         )
         new_labels = stepped.join(jump, "cluster", "left").select(
-            "node", F.coalesce("__jmp", "cluster").alias("cluster")
-        ).localCheckpoint()
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.cluster") != F.col("o.cluster"))
-            .limit(1)
-            .count()
+            "node", "__old", F.coalesce("__jmp", "cluster").alias("cluster")
         )
-        labels = new_labels
-        if changed == 0:
+        # count changed labels inside the round's own checkpoint job
+        obs = Observation()
+        labels = (
+            new_labels.observe(
+                obs,
+                F.sum(F.when(F.col("cluster") != F.col("__old"), 1).otherwise(0))
+                .alias("changed"),
+            )
+            .select("node", "cluster")
+            .localCheckpoint()
+        )
+        if not obs.get["changed"]:
             break
     else:
         raise RuntimeError(

@@ -7,10 +7,13 @@ wastes 30% of compute on padding). This operator distributes the classic
 best-fit-decreasing bin packing:
 
 - documents are md5-bucketed (engine-independent, deterministic) into
-  ``num_buckets`` independent groups — ONE shuffle, then each group
-  packs in isolation (`applyInPandas`), embarrassingly parallel;
-- within a group: sort by (tokens desc, id), then best-fit via binary
-  search over bin remaining capacities — O(n log n + n·insert), the
+  ``num_buckets`` independent groups — ONE hash exchange on the bucket,
+  then ONE Python call per partition (`mapInPandas`) sorts its rows by
+  (bucket, tokens desc, id) once and packs each bucket in isolation,
+  embarrassingly parallel (a call per partition, not per bucket: 256
+  buckets cost ≤ #partitions Python calls, not 256);
+- within a bucket: best-fit via binary search over bin remaining
+  capacities, in (tokens desc, id) order — O(n log n + n·insert), the
   standard FFD/BFD quality bound (≤ 11/9·OPT + 6/9 bins per group);
 - packing NEVER crosses buckets, so results are reproducible under any
   cluster size/partitioning — same contract as ``ops.sampling``.
@@ -29,6 +32,7 @@ from __future__ import annotations
 
 from bisect import bisect_left, insort
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -68,49 +72,33 @@ def pack_sequences(
         ]
     )
 
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        bucket = int(pdf["__pack_bucket"].iloc[0])
-        # BFD: big items first; id tiebreak pins the order
-        pdf = pdf.sort_values(
-            [tokens_col, id_col], ascending=[False, True], kind="mergesort"
+    def pack(batches):
+        parts = [pdf for pdf in batches if len(pdf)]
+        if not parts:
+            return
+        # one sort per partition: bucket, then BFD order (big items
+        # first; id tiebreak pins the order)
+        pdf = pd.concat(parts, ignore_index=True).sort_values(
+            ["__pack_bucket", tokens_col, id_col],
+            ascending=[True, False, True],
+            kind="mergesort",
         ).reset_index(drop=True)
-        # bins kept sorted by remaining capacity: (remaining, bin_id)
-        open_bins: list[tuple[int, int]] = []
-        n_bins = 0
-        seq_ids, seq_pos, oversized = [], [], []
-        fill: dict[int, int] = {}
-        for tok in pdf[tokens_col].astype("int64"):
-            tok = int(tok)
-            if tok > budget:
-                bin_id = n_bins
-                n_bins += 1
-                seq_ids.append(bin_id)
-                seq_pos.append(0)
-                oversized.append(True)
-                continue
-            i = bisect_left(open_bins, (tok, -1))
-            if i < len(open_bins):
-                rem, bin_id = open_bins.pop(i)  # tightest sufficient bin
-                rem -= tok
-            else:
-                bin_id = n_bins
-                n_bins += 1
-                rem = budget - tok
-            pos = fill.get(bin_id, 0)
-            fill[bin_id] = pos + 1
-            seq_ids.append(bin_id)
-            seq_pos.append(pos)
-            oversized.append(False)
-            if rem > 0:
-                insort(open_bins, (rem, bin_id))
-        return pd.DataFrame(
+        buckets = pdf["__pack_bucket"].to_numpy(dtype=np.int64)
+        tokens = pdf[tokens_col].to_numpy(dtype=np.int64)
+        seq_ids = np.empty(len(pdf), dtype=np.int64)
+        seq_pos = np.empty(len(pdf), dtype=np.int64)
+        starts = np.flatnonzero(np.r_[True, buckets[1:] != buckets[:-1]])
+        for lo, hi in zip(starts, np.r_[starts[1:], len(pdf)]):
+            _best_fit_decreasing(tokens[lo:hi].tolist(), budget,
+                                 seq_ids[lo:hi], seq_pos[lo:hi])
+        yield pd.DataFrame(
             {
                 id_col: pdf[id_col],
-                tokens_col: pdf[tokens_col].astype("int64"),
-                "bucket": bucket,
-                "seq_id": (bucket << 32) + pd.Series(seq_ids, dtype="int64"),
-                "seq_pos": pd.Series(seq_pos, dtype="int64"),
-                "oversized": oversized,
+                tokens_col: tokens,
+                "bucket": buckets,
+                "seq_id": (buckets << 32) + seq_ids,
+                "seq_pos": seq_pos,
+                "oversized": tokens > budget,
             }
         )
 
@@ -119,7 +107,36 @@ def pack_sequences(
         F.col(tokens_col).cast("long").alias(tokens_col),
         hash_bucket(F.col(id_col).cast("string"), salt, num_buckets).alias("__pack_bucket"),
     )
-    return slim.groupBy("__pack_bucket").applyInPandas(pack, schema=out_schema)
+    return slim.repartition("__pack_bucket").mapInPandas(pack, schema=out_schema)
+
+
+def _best_fit_decreasing(tokens: list, budget: int, seq_ids, seq_pos) -> None:
+    """Best-fit over one bucket's token counts, already in BFD order
+    (tokens desc, id): fills the bucket-local sequence index and the
+    position inside it. An item over ``budget`` gets a sequence of its
+    own."""
+    # bins kept sorted by remaining capacity: (remaining, bin_id)
+    open_bins: list[tuple[int, int]] = []
+    fill: list[int] = []  # items placed so far, per bin
+    for i, tok in enumerate(tokens):
+        if tok > budget:
+            seq_ids[i] = len(fill)
+            seq_pos[i] = 0
+            fill.append(1)
+            continue
+        j = bisect_left(open_bins, (tok, -1))
+        if j < len(open_bins):
+            rem, bin_id = open_bins.pop(j)  # tightest sufficient bin
+            rem -= tok
+        else:
+            bin_id = len(fill)
+            fill.append(0)
+            rem = budget - tok
+        seq_ids[i] = bin_id
+        seq_pos[i] = fill[bin_id]
+        fill[bin_id] += 1
+        if rem > 0:
+            insort(open_bins, (rem, bin_id))
 
 
 def packing_stats(packed: DataFrame, tokens_col: str, budget: int) -> DataFrame:

@@ -39,15 +39,56 @@ def ensure_min_parallelism(df: DataFrame, min_partitions: int | None = None) -> 
     RAW input (small by premise when partitions are few); on a 100 TB
     corpus the input already carries >> defaultParallelism partitions
     and this is a no-op — exactly when the shuffle would be expensive.
+
+    The partition count is read from the physical plan and runs nothing
+    (``planned_partitions``): ``df.rdd.getNumPartitions()`` would execute
+    every upstream shuffle stage of an adaptive plan, and the real action
+    would then run them all again.
     """
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     try:
-        current = df.rdd.getNumPartitions()
+        current = planned_partitions(df)
     except Exception:  # noqa: BLE001 — sizing probe only, never fail the op
         return df
     if current < target:
         return df.repartition(target)
     return df
+
+
+def planned_partitions(df: DataFrame) -> int:
+    """Number of partitions ``df`` is planned to produce, read without
+    launching a Spark job.
+
+    A plan without exchanges builds its RDD lazily, so its count is the
+    RDD's. An adaptive plan (any plan with an exchange) would run its
+    shuffle stages to build its RDD; its count is read from the stage
+    plan instead: the nearest partitioning above the leaves, counting
+    each shuffle at its planned partition number. AQE may later coalesce
+    a small shuffle below that number (with its default parallelism-first
+    sizing, only when the shuffled data is under ~1 MB per core); the
+    count then reads high and ``ensure_min_parallelism`` skips a
+    repartition of that small input rather than run it twice.
+    """
+    qe = df._jdf.queryExecution()
+    plan = qe.executedPlan()
+    if plan.nodeName() != "AdaptiveSparkPlan":
+        return qe.toRdd().getNumPartitions()
+    return _stage_plan_partitions(plan.executedPlan())
+
+
+def _stage_plan_partitions(plan) -> int:
+    n = plan.outputPartitioning().numPartitions()
+    if n > 0:
+        return n
+    kids = plan.children()
+    # a broadcast side contributes no partitions to its parent's output
+    probe = [kids.apply(i) for i in range(kids.size())
+             if "Broadcast" not in kids.apply(i).nodeName()]
+    if not probe:
+        # leaf scan: its splits are planned, building its RDD runs nothing
+        return plan.execute().getNumPartitions()
+    counts = [_stage_plan_partitions(k) for k in probe]
+    return sum(counts) if plan.nodeName() == "Union" else max(counts)
 
 
 def write_bucketed(

@@ -179,7 +179,7 @@ def _commit_version(sdir: str, vname: str) -> None:
     os.replace(tmp, os.path.join(sdir, "CURRENT"))
 
 
-def _gc_stale_versions(sdir: str, keep: set) -> int:
+def _gc_stale_versions(sdir: str, keep: set) -> list[str]:
     """Best-effort reclaim of superseded ``v-*`` version dirs after a
     commit (r9 advice: repeated rebuilds of one fingerprint leaked every
     prior version until the all-or-nothing drop). The committed version
@@ -189,25 +189,25 @@ def _gc_stale_versions(sdir: str, keep: set) -> int:
     files; anything two generations stale (or a racing builder's
     never-committed dir) is reclaimed. Leak bound: <= 2 versions per
     fingerprint instead of unbounded. Failures are swallowed: GC is
-    hygiene, never correctness."""
+    hygiene, never correctness. Returns the version dirs removed."""
     import shutil
 
-    n = 0
+    removed = []
     try:
         names = os.listdir(sdir)
     except OSError:
-        return 0
+        return removed
     for name in names:
         if name.startswith("v-") and name not in keep:
-            shutil.rmtree(os.path.join(sdir, name), ignore_errors=True)
-            n += 1
+            removed.append(os.path.join(sdir, name))
+            shutil.rmtree(removed[-1], ignore_errors=True)
         elif name.startswith(".CURRENT.") and name[len(".CURRENT."):] not in keep:
             # torn tmp pointer from a builder that died pre-replace
             try:
                 os.unlink(os.path.join(sdir, name))
             except OSError:
                 pass
-    return n
+    return removed
 
 
 def cached_index(backend, db, coll, mongo_path, d, family):

@@ -298,3 +298,64 @@ class TestJoinFastPath:
         plan = env._jdf.queryExecution().executedPlan().toString()
         assert "PushedFilters: [" in plan and "LessThanOrEqual" in plan, \
             plan[:1500]
+
+
+class TestCatalogHygiene:
+    """The bucketed layout registers a catalog table per version dir; no
+    path may leave one behind once its dir is gone or unused."""
+
+    @staticmethod
+    def _ivx_tables(spark) -> set:
+        return {t.name for t in spark.catalog.listTables()
+                if t.name.startswith("duckdb_mongo_spark_ivx_")}
+
+    @staticmethod
+    def _source(spark, events, tmp_path):
+        src = str(tmp_path / "ev.parquet")
+        events.limit(300).write.parquet(src)
+        return spark.read.parquet(src)
+
+    def test_failed_bucketed_write_drops_its_table(self, spark, events,
+                                                   tmp_path, monkeypatch):
+        from pyspark.sql.readwriter import DataFrameWriter
+
+        src = self._source(spark, events, tmp_path)
+        real = DataFrameWriter.saveAsTable
+
+        def fail_after_register(self, *args, **kwargs):
+            real(self, *args, **kwargs)  # table registered, files written
+            raise RuntimeError("injected bucketed-write failure")
+
+        monkeypatch.setattr(DataFrameWriter, "saveAsTable", fail_after_register)
+        before = self._ivx_tables(spark)
+        idx = build_interval_envelope_index(src, "ts", ["user_id"], DAY)
+        monkeypatch.undo()
+        assert idx.bucket is None  # the plain-layout fallback served it
+        assert self._ivx_tables(spark) == before
+        assert not spark.catalog.tableExists(idx._table_name())
+        sdir = os.path.dirname(idx.sidecar)
+        assert sorted(os.listdir(sdir)) == ["CURRENT", os.path.basename(idx.sidecar)]
+        assert sorted(os.listdir(idx.sidecar)) == ["data", "meta.json"]
+        got = sorted(map(tuple, idx.df(spark).collect()))
+        # same rows as a bucketed build of the same spec
+        ii.clear_interval_index_cache()
+        shutil.rmtree(sdir)
+        ok = build_interval_envelope_index(src, "ts", ["user_id"], DAY)
+        assert ok.bucket is not None
+        assert got == sorted(map(tuple, ok.df(spark).collect()))
+
+    def test_gc_drops_tables_of_deleted_versions(self, spark, events,
+                                                 tmp_path):
+        src = self._source(spark, events, tmp_path)
+        old = build_interval_envelope_index(src, "ts", ["user_id"], DAY)
+        assert old.bucket is not None
+        assert spark.catalog.tableExists(old._table_name())
+        # an unreadable pointer forces a rebuild of the same key; the
+        # commit's GC then deletes the old version dir
+        ii.clear_interval_index_cache()
+        os.remove(os.path.join(os.path.dirname(old.sidecar), "CURRENT"))
+        new = build_interval_envelope_index(src, "ts", ["user_id"], DAY)
+        assert new.sidecar != old.sidecar
+        assert not os.path.exists(old.sidecar)
+        assert not spark.catalog.tableExists(old._table_name())
+        assert spark.catalog.tableExists(new._table_name())

@@ -12,6 +12,11 @@ from pyspark.sql import functions as F
 
 from duckdb_mongo_spark.ops import dedup, multimodal, similarity, text
 
+# Spark jobs of dedup_keep_canonical(near_dup_pairs_minhash_lsh(...)) on
+# the small planted-pair corpus of TestDuplicateClusters (a convergence
+# join per round or an exploded-shingle verify more than doubles it)
+NEAR_DEDUP_MAX_JOBS = 19
+
 
 @pytest.fixture(scope="module")
 def docs(spark):
@@ -771,6 +776,38 @@ class TestEnsureMinParallelism:
         # already >= parallelism: no extra exchange inserted
         assert out is df
 
+    def test_probe_runs_no_job_on_shuffle_input(self, spark):
+        # the sizing probe reads the plan: on a groupBy + join input it
+        # must not run the upstream shuffle stages (a df.rdd probe ran
+        # them, and the real action then ran them again)
+        from duckdb_mongo_spark.ops.partitioning import (
+            ensure_min_parallelism,
+            planned_partitions,
+        )
+
+        base = spark.range(0, 5000).select(
+            F.col("id"), (F.col("id") % 7).alias("k"))
+        inputs = {
+            "broadcast": base.join(base.groupBy("k").count(), "k"),
+            "merge": base.join(base.groupBy("k").count().hint("shuffle_merge"), "k"),
+            "repartition": base.repartition(13),
+        }
+        sc = spark.sparkContext
+        group = "ensure-min-parallelism-no-job-probe"
+        sc.setJobGroup(group, "the sizing probe must not run a job")
+        try:
+            outs = {name: ensure_min_parallelism(df) for name, df in inputs.items()}
+            planned = planned_partitions(inputs["repartition"])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert list(jobs) == [], f"sizing probe launched jobs: {jobs}"
+        assert planned == 13
+        assert outs["repartition"] is inputs["repartition"]
+        for name, out in outs.items():
+            assert out.count() == inputs[name].count() == 5000
+
 
 class TestTokenizerPropertyEquivalence:
     """Property check: for RANDOM printable-ASCII strings (with all six
@@ -887,3 +924,100 @@ class TestDuplicateClusters:
         assert sorted(r["doc_id"] for r in kept.collect()) == [
             "d1", "d3", "d4", "d5"
         ]
+
+    @staticmethod
+    def _recursive_oracle(edges):
+        import duckdb
+
+        con = duckdb.connect()
+        con.execute("CREATE TABLE e(src VARCHAR, dst VARCHAR)")
+        if edges:
+            con.executemany("INSERT INTO e VALUES (?, ?)", edges)
+        expect = dict(
+            con.execute(
+                """
+                WITH RECURSIVE sym AS (
+                    SELECT src, dst FROM e UNION SELECT dst, src FROM e
+                ),
+                cc(node, label) AS (
+                    SELECT DISTINCT src, src FROM sym
+                    UNION
+                    SELECT s.dst, cc.label FROM cc JOIN sym s ON s.src = cc.node
+                )
+                SELECT node, MIN(label) FROM cc GROUP BY node
+                """
+            ).fetchall()
+        )
+        con.close()
+        return expect
+
+    @pytest.mark.parametrize("seed", [3, 17, 29])
+    def test_mixed_graphs_match_recursive_oracle(self, spark, seed):
+        """Seeded graphs mixing stars (hub min, hub max and hub in the
+        middle of its leaves), chains in shuffled node order, isolated
+        pairs and a few random cross edges, against the DuckDB
+        transitive-closure oracle."""
+        import random
+
+        rng = random.Random(seed)
+        ids = [f"v{i:03d}" for i in range(400)]
+        rng.shuffle(ids)
+        edges = set()
+        for _ in range(4):  # stars
+            hub, leaves = ids.pop(), [ids.pop() for _ in range(rng.randint(2, 9))]
+            edges |= {(hub, leaf) for leaf in leaves}
+        for _ in range(3):  # chains
+            chain = [ids.pop() for _ in range(rng.randint(3, 30))]
+            edges |= set(zip(chain, chain[1:]))
+        for _ in range(12):  # isolated pairs
+            edges.add((ids.pop(), ids.pop()))
+        used = sorted({n for e in edges for n in e})
+        for _ in range(3):  # cross edges merge some components
+            edges.add(tuple(rng.sample(used, 2)))
+        edges = sorted(edges)
+        assert self._clusters(spark, edges) == self._recursive_oracle(edges)
+
+    def test_empty_pair_frame(self, spark):
+        pairs = spark.createDataFrame([], "a string, b string")
+        assert dedup.duplicate_clusters(pairs).collect() == []
+        assert self._recursive_oracle([]) == {}
+
+    def test_too_small_max_iter_raises(self, spark):
+        # a 64-node chain needs several pointer-jumping rounds; one round
+        # cannot reach a fixpoint and must raise, never return labels
+        edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(63)]
+        pairs = spark.createDataFrame(edges, ["a", "b"])
+        with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+            dedup.duplicate_clusters(pairs, max_iter=1)
+
+    def test_near_dedup_job_count_guard(self, spark):
+        """The near-dedup call (LSH pairs + canonical keep) on a small
+        corpus of isolated planted pairs runs in a fixed handful of
+        Spark jobs: closed-neighbourhood initialisation resolves the
+        pairs before round one, and the round's changed-label count
+        rides its own checkpoint job."""
+        import random
+
+        rng = random.Random(5)
+        vocab = [f"w{i}" for i in range(2000)]
+        rows = [
+            (1000 + i, " ".join(rng.choice(vocab) for _ in range(rng.randint(60, 120))))
+            for i in range(60)
+        ]
+        for j in range(8):
+            words = rows[j * 7][1].split()
+            words[rng.randrange(len(words))] = "planted"
+            rows.append((2000 + j, " ".join(words)))
+        corpus = spark.createDataFrame(rows, "doc_id long, text string").localCheckpoint()
+        sc = spark.sparkContext
+        group = "near-dedup-job-count-guard"
+        sc.setJobGroup(group, "near-dedup job count")
+        try:
+            pairs = dedup.near_dup_pairs_minhash_lsh(corpus, "doc_id", "text", threshold=0.8)
+            kept = dedup.dedup_keep_canonical(corpus, pairs, "doc_id").localCheckpoint(eager=True)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert kept.count() == 60
+        assert n_jobs <= NEAR_DEDUP_MAX_JOBS, n_jobs

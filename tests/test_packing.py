@@ -127,6 +127,109 @@ class TestQualityAndDeterminism:
         assert got == expect
 
 
+def _per_bucket_oracle(df, id_col, tokens_col, budget, num_buckets, salt=""):
+    """The former ``pack_sequences`` form, kept here as an oracle: one
+    ``groupBy(bucket).applyInPandas`` call per md5 bucket, each sorting
+    its group and running best-fit-decreasing."""
+    from bisect import bisect_left, insort
+
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    from duckdb_mongo_spark.ops.sampling import hash_bucket
+
+    out_schema = T.StructType([
+        df.schema[id_col],
+        T.StructField(tokens_col, T.LongType()),
+        T.StructField("bucket", T.LongType()),
+        T.StructField("seq_id", T.LongType()),
+        T.StructField("seq_pos", T.LongType()),
+        T.StructField("oversized", T.BooleanType()),
+    ])
+
+    def pack(pdf):
+        bucket = int(pdf["__pack_bucket"].iloc[0])
+        pdf = pdf.sort_values(
+            [tokens_col, id_col], ascending=[False, True], kind="mergesort"
+        ).reset_index(drop=True)
+        open_bins, n_bins, fill = [], 0, {}
+        seq_ids, seq_pos, oversized = [], [], []
+        for tok in pdf[tokens_col].astype("int64"):
+            tok = int(tok)
+            if tok > budget:
+                seq_ids.append(n_bins)
+                seq_pos.append(0)
+                oversized.append(True)
+                n_bins += 1
+                continue
+            i = bisect_left(open_bins, (tok, -1))
+            if i < len(open_bins):
+                rem, bin_id = open_bins.pop(i)
+                rem -= tok
+            else:
+                bin_id, rem = n_bins, budget - tok
+                n_bins += 1
+            pos = fill.get(bin_id, 0)
+            fill[bin_id] = pos + 1
+            seq_ids.append(bin_id)
+            seq_pos.append(pos)
+            oversized.append(False)
+            if rem > 0:
+                insort(open_bins, (rem, bin_id))
+        return pd.DataFrame({
+            id_col: pdf[id_col],
+            tokens_col: pdf[tokens_col].astype("int64"),
+            "bucket": bucket,
+            "seq_id": (bucket << 32) + pd.Series(seq_ids, dtype="int64"),
+            "seq_pos": pd.Series(seq_pos, dtype="int64"),
+            "oversized": oversized,
+        })
+
+    slim = df.select(
+        id_col,
+        F.col(tokens_col).cast("long").alias(tokens_col),
+        hash_bucket(F.col(id_col).cast("string"), salt, num_buckets).alias("__pack_bucket"),
+    )
+    return slim.groupBy("__pack_bucket").applyInPandas(pack, schema=out_schema)
+
+
+class TestPerBucketOracle:
+    """One Python call per partition must give the rows the per-bucket
+    ``applyInPandas`` form gave: same sequence ids, positions, buckets
+    and oversized flags."""
+
+    @pytest.fixture(scope="class")
+    def tricky(self, spark):
+        rng = random.Random(7)
+        # ties on every token count, zero-token rows and oversized rows
+        sizes = [0, 1, 25, 50, 50, 64, 99, 100, 101, 250]
+        rows = [(f"t{i:04d}", rng.choice(sizes)) for i in range(600)]
+        # 16 hash partitions over 3 keys: most input partitions are empty
+        df = spark.createDataFrame(rows, "doc_id string, n_tokens long").repartition(
+            16, F.col("n_tokens") % 3)
+        parts = df.rdd.glom().map(len).collect()
+        assert len(parts) == 16 and 0 in parts and sum(parts) == 600
+        return df
+
+    @pytest.mark.parametrize("num_buckets", [1, 7, 256])
+    def test_rows_match_per_bucket_form(self, tricky, num_buckets):
+        got = pack_sequences(tricky, "doc_id", "n_tokens", BUDGET, num_buckets=num_buckets)
+        want = _per_bucket_oracle(tricky, "doc_id", "n_tokens", BUDGET, num_buckets)
+        assert got.schema == want.schema
+        rows = sorted(tuple(r) for r in got.collect())
+        assert rows == sorted(tuple(r) for r in want.collect())
+        assert len(rows) == 600 and any(r[5] for r in rows)
+        stats = packing_stats(got, "n_tokens", BUDGET)
+        assert stats.filter(~F.col("within_bound")).count() == 0
+
+    def test_integer_ids_match_per_bucket_form(self, spark):
+        rows = [(i, (i * 37) % 160) for i in range(300)]
+        df = spark.createDataFrame(rows, "chunk_id long, n long")
+        got = pack_sequences(df, "chunk_id", "n", BUDGET, num_buckets=5, salt="s")
+        want = _per_bucket_oracle(df, "chunk_id", "n", BUDGET, 5, salt="s")
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
 class TestHypothesis:
     from hypothesis import given, settings
     from hypothesis import strategies as st
