@@ -1283,23 +1283,23 @@ _register(
 
 
 def _dedup_simhash(spark, sf_dir):
-    """Arrow-kernel simhash (ops/dedup.simhash_arrow): bit-identical to
-    the JVM explode+grouped-SUM form (parity pinned in
-    tests/test_dedup.py), ~20% faster at sf0.1 and sf1 in interleaved
-    A/B (r4: 0.94 s vs 1.16 s at sf1) — the md5/bit-vote hot loop runs
-    vectorized numpy over Arrow batches instead of per-expression JVM."""
-    from duckdb_mongo_spark.ops.dedup import simhash_arrow
+    """Arrow-kernel simhash (ops/dedup.simhash), the only simhash form:
+    the JVM explode+grouped-SUM form it replaced measured ~20% slower at
+    sf0.1 and sf1 in interleaved A/B (r4: 1.16 s vs 0.94 s at sf1) and
+    was deleted; the md5/bit-vote hot loop runs vectorized numpy over
+    Arrow batches."""
+    from duckdb_mongo_spark.ops.dedup import simhash
 
     _views(spark, sf_dir, "documents")
-    return simhash_arrow(spark.table("documents"), "doc_id", "text", bits=16).orderBy("doc_id")
+    return simhash(spark.table("documents"), "doc_id", "text", bits=16).orderBy("doc_id")
 
 
-def _simhash_oracle() -> str:
+def _simhash_oracle(bits: int = 16) -> str:
     votes = ", ".join(
         f"SUM(CASE WHEN (hv >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
-        for b in range(16)
+        for b in range(bits)
     )
-    simexpr = " + ".join(f"(CASE WHEN v{b} > 0 THEN {2 ** b} ELSE 0 END)" for b in range(16))
+    simexpr = " + ".join(f"(CASE WHEN v{b} > 0 THEN {2 ** b} ELSE 0 END)" for b in range(bits))
     return f"""
     WITH tk AS (SELECT doc_id, {_SHINGLE_TOKS_SQL} AS t FROM documents),
     tok AS (SELECT doc_id, unnest(list_distinct(t)) AS tok FROM tk),
@@ -1320,25 +1320,21 @@ _COSINE_SQL = (
 
 def _sim_cosine_topk(spark, sf_dir):
     """Exact cosine top-k — GEMM kernel (mapInArrow + numpy GEMM with
-    per-batch top-k preselect), the designated 100 TB path and, since
-    r9, the ledgered/benched PRIMARY. The JVM HOF kernel
-    (zip_with/aggregate) is demoted to the pytest parity cross-check
-    (tests/test_ops.py::TestSimilarity::test_hof_kernel_matches_duckdb_oracle
-    holds it to this same DuckDB oracle on the driver testdata;
-    test_vectorized_matches_hof_path pins kernel equality): at sf10 the
-    HOF form measured 5.2-6.5x DuckDB while GEMM measured 1.6-1.9x, so
-    benching the deliberately JVM-pure cross-check as a headline line
-    item misrepresented the engine's scale path (r8 verdict #3)."""
+    per-batch top-k preselect), the only exact top-k form. The JVM HOF
+    kernel (zip_with/aggregate) it replaced measured 5.2-6.5x DuckDB at
+    sf10 while GEMM measured 1.6-1.9x, and was deleted;
+    tests/test_ops.py::TestSimilarity holds this kernel to
+    ``_COSINE_SQL`` in DuckDB."""
     from pyspark.sql import functions as F
 
-    from duckdb_mongo_spark.ops.similarity import cosine_topk_vectorized
+    from duckdb_mongo_spark.ops.similarity import cosine_topk
 
     _views(spark, sf_dir, "embeddings")
     emb = spark.table("embeddings")
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    return cosine_topk_vectorized(queries, emb, k=5).orderBy("q_id", "rank")
+    return cosine_topk(queries, emb, k=5).orderBy("q_id", "rank")
 
 
 _COSINE_TOPK_SQL = f"""

@@ -406,8 +406,8 @@ def _install_lean_line_items(qs: dict, oracles: dict) -> None:
     # dir (and therefore the sidecar's committed data path) exists
 
     # r9: the ledgered sim_cosine_topk entry IS the lean GEMM shape now
-    # (r8 verdict #3 — the HOF kernel is a pytest-only parity cross-check,
-    # so no lean override and no second cosine line item is needed).
+    # (r8 verdict #3; the HOF kernel has since been deleted), so no lean
+    # override and no second cosine line item is needed.
 
 
 def _native_pipeline_section(spark, sf_dir, qs, iters=3):

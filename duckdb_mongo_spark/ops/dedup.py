@@ -17,14 +17,20 @@ Spark-first design for 100 TB:
   convergence is counted by an observed metric inside each round's
   lineage-cutting checkpoint, so a batch of 2-node components costs
   one round and no extra convergence job
-- SimHash = per-token 16-bit md5 projections, bit-majority vote via
-  explode + grouped per-bit SUMs
+- SimHash = per-token 16-bit md5 projections, bit-majority vote in one
+  Arrow-batched Python kernel (per-row votes) + grouped per-bit SUMs
 
-Execution shape: the dedup maps use explode + partial-aggregation, NOT
-higher-order functions — HOF lambdas evaluate interpreted per element
-(bits x tokens invocations), while exploded rows stay inside
-whole-stage codegen; map-side combine bounds every shuffle at
-#docs x k values regardless of token/shingle volume.
+Execution shape: the JVM dedup maps use explode + partial-aggregation,
+NOT higher-order functions — HOF lambdas evaluate interpreted per
+element, while exploded rows stay inside whole-stage codegen; map-side
+combine bounds every shuffle at #docs x k values regardless of
+token/shingle volume.
+
+MinHash keeps two forms, each with one consumer: the JVM
+``minhash_signatures`` feeds ``near_dup_pairs_minhash_lsh`` (faster at
+the small per-call batches LSH sees), the Arrow
+``minhash_signatures_arrow`` is the standalone signature operator
+(faster at sf1 and sf10). Every other operator has one implementation.
 
 Hashes are md5-based so a DuckDB oracle reproduces values bit-for-bit.
 """
@@ -224,6 +230,12 @@ def minhash_signatures(
     (the per-row HOF form, ``array_min(transform(...))``, avoids the
     shuffle entirely but evaluates its lambdas interpreted per element
     and measured ~1.7x slower end-to-end).
+
+    Role: the signature step of ``near_dup_pairs_minhash_lsh``. At the
+    small batches LSH is called on (180 documents) this form measured
+    1.44 s per LSH call against 1.61 s with ``minhash_signatures_arrow``
+    (8 alternating pairs, identical pairs), whose Python-worker start
+    does not pay off there.
     """
     df = ensure_min_parallelism(df)
     toked = df.select(F.col(id_col), _norm_tokens(F.col(text_col)).alias("__toks"))
@@ -312,6 +324,11 @@ def minhash_signatures_arrow(
     merges rows sharing an id, preserving the unioned-shingle contract.
     Shuffle stays bounded at #rows × k strings; the per-shingle md5 cost
     moves from the JVM's per-expression evaluation into batched C calls.
+
+    Role: the standalone signature operator (``dedup_minhash_signatures``
+    ledger entry). Faster than ``minhash_signatures`` at corpus scale
+    (k=4: sf1 1.3 vs 1.6 s, sf10 4.0 vs 6.5 s); ``tests/test_ops.py``
+    holds the two forms bit-identical.
     """
     from pyspark.sql import types as T
 
@@ -393,15 +410,21 @@ def minhash_signatures_arrow(
     )
 
 
-def simhash_arrow(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFrame:
-    """``simhash`` computed by an Arrow-batched Python kernel — identical
-    output (same md5[:4] 16-bit token projection, same per-row-distinct
-    token votes merged per id).
+def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFrame:
+    """SimHash over distinct normalized tokens.
 
-    The kernel emits per-ROW bit votes (ints) and a grouped SUM merges
-    rows sharing an id before the sign threshold, so multi-row ids
-    match the JVM form's explode + grouped-SUM semantics exactly.
-    Token hashes are cached across rows within a batch.
+    Token projection = first 4 hex chars of md5(token) → 16-bit int;
+    per bit: majority vote (+1 if set, −1 if clear); simhash bit = 1
+    iff vote > 0. Output: id + simhash (BIGINT). ``id_col`` must
+    uniquely identify a document — rows sharing an id are unioned into
+    one signature. Token-less documents have no row.
+
+    Computed by an Arrow-batched Python kernel: it emits per-ROW bit
+    votes (ints) and a grouped SUM merges rows sharing an id before the
+    sign threshold (map-side partial aggregation bounds the shuffle at
+    #rows x bits longs, independent of token volume). Token hashes are
+    cached across rows within a batch. A DuckDB query reproduces the
+    values bit-for-bit (the ``dedup_simhash`` ledger entry).
     """
     from pyspark.sql import types as T
 
@@ -426,7 +449,7 @@ def simhash_arrow(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> 
             for rid, text in zip(pdf[id_col], pdf[text_col]):
                 toks = set(_py_norm_tokens(text))
                 if not toks:
-                    continue  # token-less docs have no simhash (JVM parity)
+                    continue  # token-less docs have no simhash
                 for t in toks:
                     hv = hv_cache.get(t)
                     if hv is None:
@@ -547,59 +570,6 @@ def near_dup_pairs_minhash_lsh(
         .filter(F.col("jaccard") >= threshold)
         .select("a", "b", "jaccard")
     )
-
-
-def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFrame:
-    """SimHash over distinct normalized tokens.
-
-    Token projection = first 4 hex chars of md5(token) → 16-bit int;
-    per bit: majority vote (+1 if set, −1 if clear); simhash bit = 1
-    iff vote > 0. Output: id + simhash (BIGINT). ``id_col`` must
-    uniquely identify a document — rows sharing an id are unioned into
-    one signature.
-
-    Computed as exploded token rows + one grouped SUM per bit (map-side
-    partial aggregation bounds the shuffle at #docs x bits longs,
-    independent of token volume); the per-row HOF formulation avoids
-    the shuffle but evaluates bits x tokens interpreted lambda calls
-    and measured ~1.5x slower end-to-end — see the module header.
-    """
-    df = ensure_min_parallelism(df)
-    toked = df.select(
-        F.col(id_col),
-        F.array_distinct(_norm_tokens(F.col(text_col))).alias("__toks"),
-    ).filter(F.size("__toks") > 0)  # token-less docs have no simhash (as
-    # in the unnest-based oracle)
-    hv = toked.select(
-        F.col(id_col), F.explode(F.col("__toks")).alias("__t")
-    ).select(
-        F.col(id_col),
-        F.conv(F.substring(F.md5(F.col("__t")), 1, 4), 16, 10).cast("long").alias("hv"),
-    )
-    # Execution shape: exploded token rows + one grouped SUM per bit —
-    # everything whole-stage codegen'd. The HOF formulation (aggregate
-    # over the token-hash array with per-bit zip_with votes) evaluates
-    # its lambdas interpreted: bits x tokens lambda invocations dominate
-    # (measured ~1.5x slower end-to-end). Map-side partial aggregation
-    # bounds the shuffle at #docs x bits longs — independent of token
-    # volume — so the codegen'd form wins at 100 TB too.
-    votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("hv"), b).bitwiseAND(F.lit(1)) == 1, 1)
-            .otherwise(-1)
-        ).alias(f"__v{b}")
-        for b in range(bits)
-    ]
-    voted = hv.groupBy(F.col(id_col)).agg(*votes)
-    sim = sum(
-        [
-            F.when(F.col(f"__v{b}") > 0, F.lit(2 ** b).cast("long"))
-            .otherwise(F.lit(0).cast("long"))
-            for b in range(bits)
-        ],
-        F.lit(0).cast("long"),
-    )
-    return voted.select(F.col(id_col), sim.alias("simhash"))
 
 
 def hamming64(a, b):

@@ -16,7 +16,9 @@ compositions of built-in DataFrame ops — no UDFs, no collect():
   is the standard scale-out asof algorithm (Flink's event-time temporal
   join is the streaming analog). ``nearest`` runs two window passes
   (backward + forward) over the SAME shuffle — the second pass re-sorts
-  but does not re-shuffle.
+  but does not re-shuffle. This is the only plan: a packed-history
+  broadcast form measured slower at sf10 and on the interactive shape
+  and was deleted (SCALE.md).
 - ``interval_join_points`` / ``interval_overlap_join``: bin-bucketed
   range join. Intervals explode to the fixed-width bins they cover,
   points own exactly one bin, and the join becomes an EQUI-join on
@@ -59,9 +61,9 @@ def _is_float(df: DataFrame, col: str) -> bool:
 def _approx_row_bytes(dt) -> int:
     """Schema-based per-row byte estimate (UnsafeRow-ish): fixed-width
     types at their width, variable-width at Spark's own defaultSize
-    conventions (string 20, binary 100). Used only to GATE the asof
-    broadcast strategy — an estimate, not an accountant; see
-    ``asof_join(broadcast_bytes=)``."""
+    conventions (string 20, binary 100). Used only to gate the
+    interval sidecar's broadcast (``_resolve_iv``) — an estimate, not an
+    accountant."""
     t = dt.typeName()
     if t in ("long", "double", "timestamp", "timestamp_ntz", "date"):
         return 8
@@ -87,133 +89,6 @@ def _approx_row_bytes(dt) -> int:
     return 16
 
 
-def _estimate_rows(df: DataFrame, width: int) -> int:
-    """Row-count estimate for ``asof_join(strategy="auto")`` from the
-    optimized logical plan's statistics — NO job runs (r14 residual:
-    auto previously paid an eager ``count()`` of the right lineage).
-    The plan's ``rowCount`` when it carries one, else
-    ``sizeInBytes / width`` with the same 8-byte row overhead Spark's
-    own estimator charges. For file sources ``sizeInBytes`` is the
-    COMPRESSED on-disk size, so this can UNDERestimate rows by the
-    compression ratio — the gate then errs toward broadcast; size
-    ``broadcast_rows``/``broadcast_bytes`` down for heavily-compressed
-    corpora (the docstring's existing width-estimate caveat)."""
-    stats = df._jdf.queryExecution().optimizedPlan().stats()
-    rc = stats.rowCount()
-    if rc.isDefined():
-        return int(str(rc.get()))
-    return int(str(stats.sizeInBytes())) // max(1, width)
-
-
-def _asof_broadcast(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    by: list[str],
-    direction: str,
-    tolerance: float | None,
-    tie_break: str | None,
-    rcols: list[str],
-    out_names: dict[str, str],
-) -> DataFrame:
-    """Packed-history broadcast strategy for ``asof_join`` (see its
-    docstring): the right side collapses to one time-sorted array of
-    (epoch, payload) structs per ``by`` key, broadcasts, and each left
-    row probes it with JVM higher-order functions (``filter`` +
-    ``try_element_at``) — whole-stage codegen, no Python, and the left
-    side never shuffles or sorts. Null-time right rows are already
-    dropped by the caller; a null-time left row probes with a NULL
-    bound, every element comparison is NULL, and the match is NULL —
-    the same left-outer null semantics as the window path."""
-    elem_fields = [_num(right, on).alias("__t")]
-    if tie_break is not None:
-        elem_fields.append(F.col(tie_break).alias("__tb"))
-    elem_fields.append(
-        F.struct(*[F.col(c).alias(c) for c in rcols]).alias("__p"))
-    elem = F.struct(*elem_fields)
-
-    def _cmp(a, b):
-        # time-only ordering (payload structs may hold non-orderable
-        # types like maps, so sort_array's lexicographic compare is
-        # out); tie_break ascending with NULL FIRST — parity with the
-        # window path's asc_nulls_first sort, a null tie key loses
-        c = F.when(a["__t"] < b["__t"], F.lit(-1)).when(
-            a["__t"] > b["__t"], F.lit(1))
-        if tie_break is not None:
-            c = (c.when(a["__tb"].isNull() & b["__tb"].isNotNull(), F.lit(-1))
-                 .when(a["__tb"].isNotNull() & b["__tb"].isNull(), F.lit(1))
-                 .when(a["__tb"] < b["__tb"], F.lit(-1))
-                 .when(a["__tb"] > b["__tb"], F.lit(1)))
-        return c.otherwise(F.lit(0))
-
-    hist = F.array_sort(F.collect_list(elem), _cmp).alias("__asof_hist")
-    packed = (right.groupBy(*[F.col(k) for k in by]).agg(hist)
-              if by else right.groupBy().agg(hist))
-    if by:
-        # NULL-SAFE key equality: the window path's partitionBy groups
-        # NULL by keys together (a null-key left row sees the null-key
-        # right history), so the broadcast path must too — a plain
-        # equi-join would silently drop those matches and
-        # strategy="auto" would change results with the row count.
-        # by columns are renamed first: both inputs frequently share
-        # lineage (slices of one frame) and attribute-qualified
-        # conditions would trip the ambiguity check.
-        ren = {k: f"__asof_by_{k}" for k in by}
-        packed = packed.select(
-            *[F.col(k).alias(ren[k]) for k in by], "__asof_hist")
-        cond = F.lit(True)
-        for k in by:
-            cond = cond & F.col(k).eqNullSafe(F.col(ren[k]))
-        joined = left.join(F.broadcast(packed), cond, "left").drop(
-            *ren.values())
-    else:
-        # packed is <= 1 row; a conditionless left join (not crossJoin)
-        # keeps left rows when the right side is EMPTY
-        joined = left.join(F.broadcast(packed), F.lit(True), "left")
-
-    lt = _num(left, on, F.col(on))
-    h = F.col("__asof_hist")
-
-    def _within(m, backward: bool):
-        if tolerance is None:
-            return m
-        dist = (lt - m["__t"]) if backward else (m["__t"] - lt)
-        return F.when(dist <= F.lit(float(tolerance)), m)
-
-    back = F.try_element_at(F.filter(h, lambda x: x["__t"] <= lt), F.lit(-1))
-    if tie_break is None:
-        fwd = F.try_element_at(F.filter(h, lambda x: x["__t"] >= lt), F.lit(1))
-    else:
-        # the sort is (t asc, tb asc) so the LAST element of the
-        # matched-time tie run carries the greatest tie key; the first
-        # >=-candidate only pins the matched time
-        ft = F.try_element_at(
-            F.filter(h, lambda x: x["__t"] >= lt), F.lit(1))["__t"]
-        fwd = F.try_element_at(F.filter(h, lambda x: x["__t"] == ft),
-                               F.lit(-1))
-    if direction == "backward":
-        matched = _within(back, True)
-    elif direction == "forward":
-        matched = _within(fwd, False)
-    else:  # nearest: tolerance per side, then closer wins; backward ties
-        b = _within(back, True)
-        f = _within(fwd, False)
-        matched = (
-            F.when(b.isNull(), f)
-            .when(f.isNull(), b)
-            .otherwise(F.when((f["__t"] - lt) < (lt - b["__t"]), f)
-                       .otherwise(b))
-        )
-    # a NaN probe time matches nothing (Spark's ordering would treat
-    # NaN as greater than every history time) — window-path parity; a
-    # NULL probe time already yields NULL through the filter lambdas
-    matched = F.when(~F.isnan(lt), matched)
-    return joined.select(
-        *[F.col(c) for c in left.columns],
-        *[matched["__p"][c].alias(out_names[c]) for c in rcols],
-    )
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -224,9 +99,6 @@ def asof_join(
     suffix: str = "_right",
     salt: int | None = None,
     tie_break: str | None = None,
-    strategy: str = "window",
-    broadcast_rows: int = 2_000_000,
-    broadcast_bytes: int = 256 << 20,
 ) -> DataFrame:
     """Attach to each left row the single right row nearest in ``on``
     under ``direction``, matching equal ``by`` keys (left-outer: rows
@@ -240,9 +112,9 @@ def asof_join(
     ``tolerance`` voids matches farther than the bound (seconds for
     timestamps). Right columns colliding with left names get ``suffix``.
     NULL ``by`` keys GROUP TOGETHER (a null-key left row matches
-    null-key right history — the window partitionBy convention, kept
-    identical on every strategy); note SQL/DuckDB ``ON l.k = r.k``
-    equality would instead drop them — pre-filter if you want that.
+    null-key right history — the window partitionBy convention); note
+    SQL/DuckDB ``ON l.k = r.k`` equality would instead drop them —
+    pre-filter if you want that.
     Among right rows tied on (by, on) exactly one is attached (window
     order among ties is arbitrary) — pre-aggregate the right side when
     the pick matters, or pass ``tie_break``; DuckDB's ASOF is likewise
@@ -257,35 +129,7 @@ def asof_join(
     the plan. (A capability DuckDB's ASOF lacks; it would pay the
     pre-aggregation.)
 
-    ``strategy``:
-    - ``"window"`` (default): the union+window plan described below —
-      fully distributed, the right choice whenever the right side
-      scales with the facts.
-    - ``"broadcast"``: pack the right side into per-key time-sorted
-      history arrays (one small agg), broadcast them, and probe with
-      JVM higher-order functions — the LEFT side is joined map-side
-      with ZERO shuffle and no sort. Results are bit-identical
-      (property-tested). Use when the packed right side is bounded
-      (dimension-class: quotes per instrument, config windows per
-      device); probe cost is O(per-key history) per left row, and the
-      build side must fit in executor memory — the same contract as any
-      broadcast join.
-    - ``"auto"``: estimate the right side's row count from the
-      optimized plan's statistics (rowCount when present, else
-      sizeInBytes / schema row width — NO extra job; r14's eager
-      ``count()`` removed) and take ``"broadcast"`` iff estimated rows
-      <= ``broadcast_rows`` AND the schema-estimated packed size
-      (rows x approximate row width) <= ``broadcast_bytes`` (default
-      256 MiB) — the analog of Spark's own broadcast-vs-shuffle
-      selection, which is likewise statistics-byte-based. Both terms
-      are ESTIMATES (file sizeInBytes is compressed; the width prices
-      variable-width types at Spark's defaultSize conventions, string
-      20 B) — a wrong guess costs performance, never correctness (the
-      strategies are bit-identical, property-tested); size
-      ``broadcast_rows``/``broadcast_bytes`` down for compressed
-      corpora of long strings.
-
-    NULL (and float NaN) ``on`` times match nothing on any strategy:
+    NULL (and float NaN) ``on`` times match nothing:
     null/NaN-time right rows attach to no left row, null/NaN-time left
     rows keep NULL right columns.
 
@@ -305,8 +149,6 @@ def asof_join(
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"direction must be backward|forward|nearest, got {direction!r}")
-    if strategy not in ("window", "broadcast", "auto"):
-        raise ValueError(f"strategy must be window|broadcast|auto, got {strategy!r}")
     by = list(by or [])
     for side, df_ in (("right", right), ("left", left)):
         missing = [k for k in by if k not in df_.columns]
@@ -319,11 +161,6 @@ def asof_join(
             raise ValueError(f"tie_break {tie_break!r} absent from right")
         if tie_break in by:
             raise ValueError("tie_break cannot be a 'by' key")
-    if salt is not None and strategy != "window":
-        # salt is a WINDOW-path skew control (sub-partitioning the sort);
-        # the broadcast path has no shuffle to skew
-        raise ValueError("salt applies to strategy='window' only")
-
     if salt is not None:
         if salt < 2:
             raise ValueError("salt must be >= 2")
@@ -358,32 +195,13 @@ def asof_join(
     # SQL/DuckDB ASOF semantics: a NULL time matches nothing — drop
     # null-time right rows (they could otherwise pair up through window
     # null ordering) and null out matches for null-time left rows below.
-    # A float NaN time is normalized the same way (ADVICE r13): Spark's
-    # ordering places NaN greatest while the broadcast comparator treats
-    # it as unordered, so without this the strategies would diverge on
-    # NaN input — under the normalization a NaN time matches nothing on
-    # every strategy, property-tested.
+    # A float NaN time is normalized the same way: Spark's ordering
+    # places NaN greatest, so without this a NaN right row would be a
+    # forward match for left rows past the last real time; under the
+    # normalization a NaN time matches nothing, property-tested.
     right = right.filter(F.col(on).isNotNull())
     if _is_float(right, on):
         right = right.filter(~F.isnan(F.col(on)))
-
-    if strategy == "auto":
-        # row count alone ignores payload width (ADVICE r13) — a 2M-row
-        # right side of wide structs packs into multi-GB per-key history
-        # arrays; gate on estimated bytes too (schema-based width — an
-        # estimate, so size broadcast_rows/broadcast_bytes to your
-        # payload when the schema lies, e.g. long strings). r15: rows
-        # come from plan STATISTICS, not an eager count() — auto no
-        # longer evaluates the right lineage an extra time.
-        width = sum(_approx_row_bytes(f.dataType)
-                    for f in right.schema.fields)
-        n = _estimate_rows(right, 8 + width)
-        strategy = ("broadcast"
-                    if n <= broadcast_rows and n * width <= broadcast_bytes
-                    else "window")
-    if strategy == "broadcast":
-        return _asof_broadcast(left, right, on, by, direction, tolerance,
-                               tie_break, rcols, out_names)
 
     tb_cols_l, tb_cols_r = [], []
     if tie_break is not None:

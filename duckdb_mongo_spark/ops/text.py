@@ -9,6 +9,11 @@ quality scoring (length/punctuation/stopword/token-shape ratios),
 language ID (marker-word n-gram heuristic), document fingerprinting
 (normalized md5 + positional rolling sample).
 
+The per-column functions are Column compositions; the two bundles,
+``with_text_stats`` and ``with_analysis``, have one builder each, which
+emits parsed SQL text (one py4j round trip per output column). Their
+literals go through ``_sql_str``, which no parser conf can reinterpret.
+
 HOT-PATH REGEX BAN (measured): ``java.util.regex`` evaluation degrades
 ~65x per character once multiple executor threads run it concurrently
 in one JVM (sf1, local[32]: 0.9 core-sec of single-thread regex work
@@ -52,46 +57,27 @@ def _sp(n: int) -> str:
 
 
 def _sql_str(s: str) -> str:
-    """Render a Python string as a Spark SQL string literal: backslash
-    and quote escaped, non-printing chars as ``\\uXXXX`` (the control
-    chars in the whitespace tables must survive the SQL parser).
-
-    Spark's string unescape consumes EXACTLY four hex digits per
-    ``\\u``, so astral (non-BMP) chars are emitted as a UTF-16
-    surrogate pair — two ``\\uXXXX`` escapes the JVM string layer
-    recombines (ADVICE r14; a 5-6 digit escape would silently decode
-    to a different string)."""
-    out = []
+    """Render a Python string as a Spark SQL string expression that
+    parses to ``s`` under every parser conf: the two chars the parser's
+    unescape rules touch, quote and backslash, are emitted as ``chr(39)``
+    and ``chr(92)`` joined to the raw single-quoted runs by
+    ``concat(...)``; every other char (controls and astral chars
+    included) rides raw inside the quotes. With or without
+    ``spark.sql.parser.escapedStringLiterals`` the text parses to the
+    same string, and ConstantFolding folds the ``concat`` back into one
+    literal, so the optimized plan is the one an escaped literal gives."""
+    parts, run = [], []
     for ch in s:
-        cp = ord(ch)
-        if ch == "\\":
-            out.append("\\\\")
-        elif ch == "'":
-            out.append("\\'")
-        elif 32 <= cp < 127:
-            out.append(ch)
-        elif cp > 0xFFFF:
-            hi, lo = divmod(cp - 0x10000, 0x400)
-            out.append(f"\\u{0xD800 + hi:04X}\\u{0xDC00 + lo:04X}")
+        if ch in "'\\":
+            if run:
+                parts.append("'" + "".join(run) + "'")
+                run = []
+            parts.append(f"chr({ord(ch)})")
         else:
-            out.append(f"\\u{cp:04X}")
-    return "'" + "".join(out) + "'"
-
-
-def _sql_text_ok(df: DataFrame) -> bool:
-    """True when the session parses string literals with the default
-    escape rules the ``*_text`` fast paths are written against. With
-    ``spark.sql.parser.escapedStringLiterals=true`` (legacy Hive
-    compat) the ``\\uXXXX`` / ``\\\\`` / ``\\'`` escapes in the
-    translate tables would parse LITERALLY and silently change
-    tokenization (ADVICE r14) — callers must fall back to the
-    Column-API composition, which is immune to parser confs."""
-    try:
-        return str(df.sparkSession.conf.get(
-            "spark.sql.parser.escapedStringLiterals", "false"
-        )).lower() != "true"
-    except Exception:
-        return False
+            run.append(ch)
+    if run or not parts:
+        parts.append("'" + "".join(run) + "'")
+    return parts[0] if len(parts) == 1 else "concat(" + ", ".join(parts) + ")"
 
 
 def _sql_name(c: str) -> str:
@@ -200,14 +186,10 @@ def with_text_stats(df: DataFrame, col: str = "text") -> DataFrame:
     per element, so an inline split/regexp expression inside a lambda
     would be recomputed per token (~10-50× slowdown on real documents).
 
-    For a string ``col`` the expressions are built as parsed SQL text —
-    one py4j round trip each instead of one per Column operator (~1900
-    per build for the full analysis bundle, ~0.1 s of pure driver-side
-    construction). The trees and results are identical; the paths are
-    pinned to each other in tests/test_ops.py."""
-    if not isinstance(col, str) or not _sql_text_ok(df):
-        return _with_text_stats_cols(
-            df, F.col(col) if isinstance(col, str) else col)
+    The expressions are built as parsed SQL text — one py4j round trip
+    each instead of one per Column operator (~1900 per build for the full
+    analysis bundle, ~0.1 s of pure driver-side construction). Literals
+    go through ``_sql_str``, so every parser conf yields the same tree."""
     df = ensure_min_parallelism(df)
     base = list(df.columns)
     c_sql = _sql_name(col)
@@ -244,37 +226,6 @@ def with_text_stats(df: DataFrame, col: str = "text") -> DataFrame:
             "CAST(length(concat_ws('', `__toks`)) AS BIGINT) "
             "/ size(`__toks`) ELSE 0.0D END"
         ).alias("avg_token_len"),
-    )
-
-
-def _with_text_stats_cols(df: DataFrame, col) -> DataFrame:
-    """Column-input form of ``with_text_stats`` (the original Column-API
-    composition) — kept for callers passing a Column expression, and as
-    the parity anchor the SQL-text fast path is tested against."""
-    sw = F.array(*[F.lit(w) for w in STOPWORDS_EN])
-    df = ensure_min_parallelism(df)
-    base = [F.col(c) for c in df.columns]
-    toked = df.select(*base, ws_tokens(col).alias("__toks"))
-    toks = F.col("__toks")
-    return toked.select(
-        *base,
-        F.size(toks).alias("n_tokens"),
-        bpe_token_count(col).alias("n_bpe_tokens"),
-        punct_ratio(col).alias("punct_ratio"),
-        F.when(
-            F.size(toks) > 0,
-            F.size(
-                F.filter(
-                    F.transform(toks, F.lower),
-                    lambda t: F.array_contains(sw, _strip_non_alpha(t)),
-                )
-            )
-            / F.size(toks),
-        ).otherwise(F.lit(0.0)).alias("stopword_ratio"),
-        F.when(
-            F.size(toks) > 0,
-            F.length(F.concat_ws("", toks)).cast("long") / F.size(toks),
-        ).otherwise(F.lit(0.0)).alias("avg_token_len"),
     )
 
 
@@ -323,13 +274,6 @@ def _language_id_from_counts(counts: dict) -> Column:
     return out
 
 
-def _language_id_from_toks(toks) -> Column:
-    """argmax over per-language marker counts from a MATERIALIZED
-    lowercase token array column; ties broken by language code order;
-    'und' when nothing matches."""
-    return _language_id_from_counts(_lang_marker_counts(toks))
-
-
 def _lang_tokens(col) -> Column:
     """Lowercase letter-run tokens (``[^a-z\\s]`` separators on ASCII =
     digits + punctuation, enumerated — see module header)."""
@@ -341,8 +285,9 @@ def _lang_tokens(col) -> Column:
 
 def language_id(col) -> Column:
     """Marker-word language ID (one-shot column form; hot paths should
-    materialize the token array and use ``_language_id_from_toks``)."""
-    return _language_id_from_toks(_lang_tokens(col))
+    materialize the token array and count markers over it once, as
+    ``with_analysis`` does)."""
+    return _language_id_from_counts(_lang_marker_counts(_lang_tokens(col)))
 
 
 def fingerprint(col) -> Column:
@@ -359,15 +304,13 @@ def with_analysis(df: DataFrame, col: str = "text") -> DataFrame:
 
     quality is derived from the already-computed ratio columns (one
     evaluation per ratio — keeps the codegen'd expression tree small).
-    String ``col`` takes the SQL-text construction fast path (see
-    ``with_text_stats``); Column inputs keep the Column-API form, and
-    the two are parity-pinned in tests/test_ops.py."""
-    if not isinstance(col, str) or not _sql_text_ok(df):
-        return _with_analysis_cols(
-            df, F.col(col) if isinstance(col, str) else col)
+    Built as parsed SQL text, like ``with_text_stats``, with the
+    arithmetic of the column functions above (``quality_score``,
+    ``language_id``, ``fingerprint``); tests/test_ops.py holds it to the
+    DuckDB templates below."""
     out = with_text_stats(df, col)
     c_sql = _sql_name(col)
-    # identical arithmetic (and operator order) to the Column form:
+    # identical arithmetic (and operator order) to ``quality_score``:
     # ((0.3*len_score + 0.3*punct_score) + 0.4*sw_score), all doubles
     quality = (
         f"round(0.3D * least(length({c_sql}) / 500.0D, 1.0D) + "
@@ -412,37 +355,6 @@ def with_analysis(df: DataFrame, col: str = "text") -> DataFrame:
         "quality",
         F.expr(f"CASE {whens} ELSE 'und' END").alias("lang_id"),
         "fingerprint",
-    )
-
-
-def _with_analysis_cols(df: DataFrame, col) -> DataFrame:
-    """Column-input form of ``with_analysis`` (original Column-API
-    composition) — the parity anchor for the SQL-text fast path."""
-    out = _with_text_stats_cols(df, col)
-    n = F.length(col)
-    len_score = F.least(n / F.lit(500.0), F.lit(1.0))
-    punct_score = F.lit(1.0) - F.least(F.col("punct_ratio") * 5.0, F.lit(1.0))
-    sw_score = F.least(F.col("stopword_ratio") * 4.0, F.lit(1.0))
-    stats = [F.col(c) for c in out.columns]
-    with_lt = out.select(
-        *stats,
-        F.round(0.3 * len_score + 0.3 * punct_score + 0.4 * sw_score, 6).alias("quality"),
-        _lang_tokens(col).alias("__lt"),
-    )
-    lc = _lang_marker_counts(F.col("__lt"))
-    langs = sorted(LANG_MARKERS)
-    with_counts = with_lt.select(
-        *stats,
-        F.col("quality"),
-        *[lc[l].alias(f"__lc_{l}") for l in langs],
-        fingerprint(col).alias("fingerprint"),
-    )
-    return with_counts.select(
-        *stats,
-        F.col("quality"),
-        _language_id_from_counts(
-            {l: F.col(f"__lc_{l}") for l in langs}).alias("lang_id"),
-        F.col("fingerprint"),
     )
 
 

@@ -347,12 +347,19 @@ def get_collection_vector_index(
         feat_arr = vec
     feat = fit_src.withColumn("__features", array_to_vector(feat_arr))
     # bounded deterministic sample (orderBy the id column — same stance
-    # as ivf_index's orderBy(c_id))
-    sample_src = (feat.orderBy(id_name).limit(_fit_sample())
-                  .select("__features"))
-    n_fit = sample_src.count()
+    # as ivf_index's orderBy(c_id)), fitted in a fixed layout: id order
+    # in defaultParallelism contiguous slices. k-means|| init samples per
+    # partition, so fitting the frame as planned made the cells follow
+    # the scan path and the session's range-exchange sampling.
+    rows = feat.orderBy(id_name).limit(_fit_sample()).select(
+        "__features").collect()
+    n_fit = len(rows)
     if n_fit == 0:
         return None  # nothing to fit (e.g. all-zero cos corpus) — exact path
+    sc = bdf.sparkSession.sparkContext
+    sample_src = bdf.sparkSession.createDataFrame(
+        sc.parallelize(rows, sc.defaultParallelism),
+        feat.select("__features").schema)
     k_env = os.environ.get("SPARK_GRAFT_IVF_CENTROIDS")
     k = int(k_env) if k_env else max(1, min(1024, round(math.sqrt(n_fit) * 2)))
     k = min(k, n_fit)

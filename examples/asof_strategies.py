@@ -1,13 +1,11 @@
-"""As-of join strategies end to end — window, broadcast, auto, tie_break,
-and the single-scan self-join form.
+"""As-of join forms end to end — the two-input window plan with
+tie_break and the single-scan self-join form.
 
 Runs on the driver testdata (events table, sf0.001 by default) with no
 server and prints, for each shape: the row-identical result digest and
 the physical-plan signature that proves its scale story —
 
 - window:    one hash exchange on the ``by`` keys, a Window, no join
-- broadcast: a BroadcastHashJoin, NO Window, and no exchange above the
-             probe side (the left never shuffles or sorts)
 - self-join: exactly ONE FileScan for both sides (a union of two
              filters of the same table would plan two)
 
@@ -43,7 +41,7 @@ def digest(df):
         F.avg("err_value").alias("avg_value"),
     ).collect()[0]
     # avg rounded to whole ms: different physical plans sum floats in
-    # different orders (a Spark-wide caveat, not a strategy difference)
+    # different orders (a Spark-wide caveat, not a plan difference)
     return (row["n"], round((row["avg_match_us"] or 0) / 1000),
             round(row["avg_value"] or 0, 6))
 
@@ -64,12 +62,6 @@ def main(sf_dir: str) -> None:
     shapes = {
         "window + tie_break": asof_join(
             clicks, errors, on="ts", by=["user_id"], tie_break="err_value"),
-        "broadcast + tie_break": asof_join(
-            clicks, errors, on="ts", by=["user_id"], tie_break="err_value",
-            strategy="broadcast"),
-        "auto (counts the right side)": asof_join(
-            clicks, errors, on="ts", by=["user_id"], tie_break="err_value",
-            strategy="auto"),
         "self-join (single scan)": asof_self_join(
             ev, F.col("event_type") == "click", F.col("event_type") == "error",
             on="ts", left_cols=["event_id"], right_cols=["err_value"],
@@ -80,8 +72,8 @@ def main(sf_dir: str) -> None:
         d = digest(df)
         digests.add(d)
         print(f"{name:32s} digest={d}  [{plan_sig(df)}]")
-    assert len(digests) == 1, f"strategies disagree: {digests}"
-    print("\nAll strategies value-identical; each plan matches its scale "
+    assert len(digests) == 1, f"forms disagree: {digests}"
+    print("\nBoth forms value-identical; each plan matches its scale "
           "contract above.")
 
 

@@ -138,6 +138,13 @@ class TestAsofJoin:
             # by key present on right only must fail at the API, not as
             # an unresolved-column error inside the window expression
             asof_join(df.drop("k"), df, on="t", by=["k"])
+        tb = spark.createDataFrame([(1, 1.0, 2.0)], "k int, t double, v double")
+        with pytest.raises(ValueError, match="tie_break"):
+            asof_join(tb, tb, on="t", tie_break="missing")
+        with pytest.raises(ValueError, match="tie_break"):
+            asof_join(tb, tb, on="t", by=["k"], tie_break="k")
+        with pytest.raises(ValueError, match="salt"):
+            asof_join(tb, tb, on="t", by=["k"], salt=1)
 
     def test_null_times_never_match(self, spark):
         # SQL/DuckDB ASOF: NULL never matches — null-t left rows keep
@@ -154,9 +161,10 @@ class TestAsofJoin:
 
 
 class TestAsofTieBreakAndStrategies:
-    """r13: tie_break (pre-aggregation folded into the sort) and the
-    packed-history broadcast strategy — both must be value-identical to
-    the default window path / the pre-aggregated DuckDB oracle."""
+    """r13: tie_break (pre-aggregation folded into the sort) must equal
+    the pre-aggregated DuckDB oracle; edge cases of the window plan (the
+    only asof plan since the packed-history broadcast form was
+    deleted)."""
 
     def test_tie_break_equals_preagg_oracle(self, clicks, errors, con):
         # tie_break="value" over RAW errors == ASOF over the
@@ -177,145 +185,59 @@ class TestAsofTieBreakAndStrategies:
         right = spark.createDataFrame(
             [(1, 3.0, 1.0), (1, 3.0, 9.0), (1, 3.0, 4.0),
              (1, 3.0, None)], "k int, t double, v double")
-        for strategy in ("window", "broadcast"):
-            for direction in ("backward", "forward", "nearest"):
-                rows = {r.t: r.v for r in asof_join(
-                    left, right, on="t", by=["k"], direction=direction,
-                    tie_break="v", strategy=strategy).collect()}
-                assert rows[5.0] == (9.0 if direction != "forward" else None), \
-                    (strategy, direction)
-                assert rows[2.0] == (9.0 if direction != "backward" else None), \
-                    (strategy, direction)
+        for direction in ("backward", "forward", "nearest"):
+            rows = {r.t: r.v for r in asof_join(
+                left, right, on="t", by=["k"], direction=direction,
+                tie_break="v").collect()}
+            assert rows[5.0] == (9.0 if direction != "forward" else None), \
+                direction
+            assert rows[2.0] == (9.0 if direction != "backward" else None), \
+                direction
 
-    @pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
-    @pytest.mark.parametrize("tolerance", [None, 7200.0])
-    def test_broadcast_equals_window(self, clicks, errors, direction, tolerance):
-        kw = dict(on="ts", by=["user_id"], direction=direction,
-                  tolerance=tolerance, tie_break="value")
-        w = asof_join(clicks, errors, strategy="window", **kw)
-        b = asof_join(clicks, errors, strategy="broadcast", **kw)
-        key = lambda r: (r.event_id, str(r.ts_right), str(r.value))  # noqa: E731
-        got_w = sorted(map(key, w.collect()))
-        got_b = sorted(map(key, b.collect()))
-        assert got_w == got_b and got_w
-
-    def test_broadcast_no_by_and_empty_right(self, spark):
+    def test_no_by_and_empty_right(self, spark):
         left = spark.createDataFrame([(i, float(i)) for i in range(5)], "id int, t double")
         right = spark.createDataFrame([(2.5, "a"), (4.0, "b")], "t double, v string")
-        got = {r.id: r.v for r in asof_join(
-            left, right, on="t", strategy="broadcast").collect()}
+        got = {r.id: r.v for r in asof_join(left, right, on="t").collect()}
         assert got == {0: None, 1: None, 2: None, 3: "a", 4: "b"}
         # empty right: all left rows kept, NULL payload (left-outer)
         empty = right.filter(F.lit(False))
-        rows = asof_join(left, empty, on="t", strategy="broadcast").collect()
+        rows = asof_join(left, empty, on="t").collect()
         assert len(rows) == 5 and all(r.v is None for r in rows)
 
-    def test_broadcast_null_by_keys_group_together(self, spark):
-        # window partitionBy groups NULL keys; the broadcast equi-join
-        # must match via null-safe equality or auto would change
-        # results with the right side's row count (r13 review fix)
+    def test_null_by_keys_group_together(self, spark):
+        # window partitionBy groups NULL keys: a null-key left row sees
+        # the null-key right history (unlike SQL ``ON l.k = r.k``)
         left = spark.createDataFrame(
             [(None, 5.0), (1, 5.0)], "k int, t double")
         right = spark.createDataFrame(
             [(None, 3.0, "nullkey"), (1, 4.0, "one")],
             "k int, t double, v string")
-        for strategy in ("window", "broadcast"):
-            rows = {r.k: r.v for r in asof_join(
-                left, right, on="t", by=["k"], strategy=strategy).collect()}
-            assert rows == {None: "nullkey", 1: "one"}, strategy
+        rows = {r.k: r.v for r in asof_join(
+            left, right, on="t", by=["k"]).collect()}
+        assert rows == {None: "nullkey", 1: "one"}
 
-    def test_broadcast_null_left_time(self, spark):
-        left = spark.createDataFrame([(1, None), (1, 5.0)], "k int, t double")
-        right = spark.createDataFrame([(1, 3.0, "early")], "k int, t double, v string")
-        for direction in ("backward", "forward", "nearest"):
-            rows = {r.t: r.v for r in asof_join(
-                left, right, on="t", by=["k"], direction=direction,
-                strategy="broadcast").collect()}
-            assert rows[None] is None, direction
-
-    def test_broadcast_plan_no_shuffle_on_left(self, clicks, errors):
-        # the point of the strategy: the probe side joins map-side —
-        # no Exchange above the left scan, no Window anywhere
-        out = asof_join(clicks, errors, on="ts", by=["user_id"],
-                        strategy="broadcast")
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan
-        assert "Window" not in plan
-        # the only exchange allowed is the broadcast build's own agg
-        import re
-        n = len(re.findall(r"Exchange hashpartitioning", plan))
-        assert n <= 1, f"{n} hash exchanges\n{plan[:2500]}"
-
-    def test_auto_strategy_picks_by_count(self, clicks, errors):
-        small = asof_join(clicks, errors, on="ts", by=["user_id"],
-                          strategy="auto", broadcast_rows=10**9)
-        assert "BroadcastHashJoin" in small._jdf.queryExecution().executedPlan().toString()
-        big = asof_join(clicks, errors, on="ts", by=["user_id"],
-                        strategy="auto", broadcast_rows=0)
-        assert "Window" in big._jdf.queryExecution().executedPlan().toString()
-
-    def test_auto_strategy_runs_no_eager_job(self, spark, clicks, errors):
-        # r15 (r14 verdict #6): auto sizes the right side from plan
-        # STATISTICS — constructing and planning the join must launch
-        # zero Spark jobs (r14's auto paid an eager count() here)
-        sc = spark.sparkContext
-        group = "asof-auto-no-job-probe"
-        sc.setJobGroup(group, "auto strategy must not run an eager job")
-        try:
-            out = asof_join(clicks, errors, on="ts", by=["user_id"],
-                            strategy="auto")
-            out._jdf.queryExecution().executedPlan()  # plan, don't run
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-        assert list(jobs) == [], f"auto strategy launched jobs: {jobs}"
-
-    def test_nan_times_match_nothing_all_strategies(self, spark):
-        # r14 (ADVICE r13): float NaN times are normalized like NULL —
-        # NaN right rows attach to nobody, NaN left rows keep NULL
-        # payload — IDENTICALLY on window and broadcast, so
-        # strategy="auto" can never change results with the row count
+    def test_nan_times_match_nothing(self, spark):
+        # r14: float NaN times are normalized like NULL — NaN right rows
+        # attach to nobody, NaN left rows keep NULL payload
         nan = float("nan")
         left = spark.createDataFrame(
             [(1, nan), (1, 5.0), (1, 100.0)], "k int, t double")
         right = spark.createDataFrame(
             [(1, 3.0, "early"), (1, nan, "nants")],
             "k int, t double, v string")
-        for strategy in ("window", "broadcast"):
-            for direction in ("backward", "forward", "nearest"):
-                rows = {str(r.t): r.v for r in asof_join(
-                    left, right, on="t", by=["k"], direction=direction,
-                    strategy=strategy).collect()}
-                assert rows["nan"] is None, (strategy, direction)
-                # 100.0 sits beyond every REAL right time: a forward
-                # probe must not fall through to the NaN right row
-                assert rows["100.0"] == (
-                    "early" if direction != "forward" else None
-                ), (strategy, direction)
-                assert rows["5.0"] == (
-                    "early" if direction != "forward" else None
-                ), (strategy, direction)
-
-    def test_auto_strategy_respects_byte_bound(self, clicks, errors):
-        # r14 (ADVICE r13): auto gates on estimated bytes, not rows
-        # alone — a row count under broadcast_rows with a byte estimate
-        # over broadcast_bytes must take the window path
-        big = asof_join(clicks, errors, on="ts", by=["user_id"],
-                        strategy="auto", broadcast_rows=10**9,
-                        broadcast_bytes=1)
-        assert "Window" in big._jdf.queryExecution().executedPlan().toString()
-
-    def test_rejects_bad_strategy_args(self, spark):
-        df = spark.createDataFrame([(1, 1.0, 2.0)], "k int, t double, v double")
-        with pytest.raises(ValueError, match="strategy"):
-            asof_join(df, df, on="t", strategy="magic")
-        with pytest.raises(ValueError, match="tie_break"):
-            asof_join(df, df, on="t", tie_break="missing")
-        with pytest.raises(ValueError, match="tie_break"):
-            asof_join(df, df, on="t", by=["k"], tie_break="k")
-        with pytest.raises(ValueError, match="salt"):
-            asof_join(df, df, on="t", by=["k"], salt=2, strategy="broadcast")
+        for direction in ("backward", "forward", "nearest"):
+            rows = {str(r.t): r.v for r in asof_join(
+                left, right, on="t", by=["k"],
+                direction=direction).collect()}
+            assert rows["nan"] is None, direction
+            # 100.0 sits beyond every REAL right time: a forward
+            # probe must not fall through to the NaN right row
+            assert rows["100.0"] == (
+                "early" if direction != "forward" else None
+            ), direction
+            assert rows["5.0"] == (
+                "early" if direction != "forward" else None
+            ), direction
 
 
 class TestAsofSelfJoin:

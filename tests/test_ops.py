@@ -140,11 +140,13 @@ class TestSimhash:
 
 
 class TestArrowKernelParity:
-    """The Arrow (mapInPandas numpy) kernels must be BIT-IDENTICAL to the
-    JVM explode+grouped-agg forms — same tokenizer, same md5 digest-slice
-    contract, same multi-row-id merge semantics. Corpus includes exact
-    dups, near dups, an empty doc, punctuation-heavy text, and ids spread
-    over several partitions so the grouped merge actually runs."""
+    """The Arrow (mapInPandas numpy) kernels must be BIT-IDENTICAL to an
+    independent reference — the JVM explode+grouped-MIN minhash form, the
+    DuckDB simhash oracle of the ``dedup_simhash`` ledger entry — same
+    tokenizer, same md5 digest-slice contract, same multi-row-id merge
+    semantics. Corpus includes exact dups, near dups, an empty doc,
+    punctuation-heavy text, and ids spread over several partitions so the
+    grouped merge actually runs."""
 
     @pytest.fixture(scope="class")
     def parity_docs(self, spark):
@@ -169,15 +171,27 @@ class TestArrowKernelParity:
             b = dedup.minhash_signatures_arrow(parity_docs, "doc_id", "text", k=k).orderBy("doc_id").collect()
             assert a == b
 
-    def test_simhash_arrow_matches_jvm(self, parity_docs):
-        a = dedup.simhash(parity_docs, "doc_id", "text", bits=16).orderBy("doc_id").collect()
-        b = dedup.simhash_arrow(parity_docs, "doc_id", "text", bits=16).orderBy("doc_id").collect()
-        assert a == b
+    @staticmethod
+    def _simhash_vs_duckdb(parity_docs, bits):
+        import duckdb
 
-    def test_simhash_arrow_smaller_bits(self, parity_docs):
-        a = dedup.simhash(parity_docs, "doc_id", "text", bits=8).orderBy("doc_id").collect()
-        b = dedup.simhash_arrow(parity_docs, "doc_id", "text", bits=8).orderBy("doc_id").collect()
-        assert a == b
+        import __spark_entry__ as entry
+        from _oracle import compare
+
+        con = duckdb.connect()
+        con.execute("CREATE TABLE documents (doc_id VARCHAR, text VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?)",
+                        [tuple(r) for r in parity_docs.collect()])
+        df = dedup.simhash(parity_docs, "doc_id", "text", bits=bits).orderBy("doc_id")
+        res = compare(df, con, entry._simhash_oracle(bits))
+        assert res["value_match"] and res["strict_match"], res
+        assert res["rows_spark"] == 6  # 7 ids, the empty doc has no row
+
+    def test_simhash_matches_duckdb_oracle(self, parity_docs):
+        self._simhash_vs_duckdb(parity_docs, 16)
+
+    def test_simhash_smaller_bits_matches_duckdb_oracle(self, parity_docs):
+        self._simhash_vs_duckdb(parity_docs, 8)
 
     def test_python_tokenizer_matches_jvm(self, spark):
         from duckdb_mongo_spark.ops.dedup import _norm_tokens, _py_norm_tokens
@@ -213,31 +227,36 @@ class TestSimilarity:
         assert rows[0]["score"] == pytest.approx(1.0)
         assert rows[1]["score"] == pytest.approx(0.9 / math.sqrt(0.82), abs=1e-6)
 
-    def test_vectorized_matches_hof_path(self, spark, corpus):
-        q = spark.createDataFrame(
-            [("q1", [1.0, 0.0, 0.0]), ("q2", [0.0, 0.5, 0.5])], ["q_id", "q_vec"])
-        hof = similarity.cosine_topk(q, corpus, k=3).collect()
-        vec = similarity.cosine_topk_vectorized(q, corpus, k=3).collect()
-        key = lambda r: (r["q_id"], r["rank"])
-        assert sorted([tuple(r) for r in hof], key=lambda t: (t[0], t[3])) == \
-               sorted([tuple(r) for r in vec], key=lambda t: (t[0], t[3]))
+    def test_cosine_topk_matches_duckdb_sql(self, spark, corpus):
+        # the ledger's cosine expression (_COSINE_SQL) in DuckDB over the
+        # same fixture, ranked like the kernel (score desc, id asc)
+        import duckdb
 
-    def test_hof_kernel_matches_duckdb_oracle(self, spark, sf_dir):
-        # r9: the HOF kernel left the ledger/bench (GEMM is the scale
-        # primary per the r8 verdict); this keeps it oracle-proven on the
-        # driver testdata. Together with test_vectorized_matches_hof_path
-        # it transitively holds the GEMM path to true DuckDB values.
         import __spark_entry__ as entry
-        from _oracle import compare, duckdb_con
-        from pyspark.sql import functions as F
+        from _oracle import compare
 
-        entry._views(spark, sf_dir, "embeddings")
-        emb = spark.table("embeddings")
-        q = emb.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-        df = similarity.cosine_topk(q, emb, k=5, dim=64).orderBy("q_id", "rank")
-        res = compare(df, duckdb_con(sf_dir), entry._COSINE_TOPK_SQL)
+        qrows = [("q1", [1.0, 0.0, 0.0]), ("q2", [0.0, 0.5, 0.5])]
+        q = spark.createDataFrame(qrows, ["q_id", "q_vec"])
+        con = duckdb.connect()
+        con.execute("CREATE TABLE q (q_id VARCHAR, qv DOUBLE[])")
+        con.execute("CREATE TABLE c (c_id VARCHAR, cv DOUBLE[])")
+        con.executemany("INSERT INTO q VALUES (?, ?)", qrows)
+        con.executemany("INSERT INTO c VALUES (?, ?)",
+                        [tuple(r) for r in corpus.collect()])
+        sql = f"""
+            WITH scored AS (SELECT q_id, c_id, {entry._COSINE_SQL} AS score
+                            FROM q, c),
+            ranked AS (SELECT q_id, c_id, score,
+                              ROW_NUMBER() OVER (PARTITION BY q_id
+                                                 ORDER BY score DESC, c_id) AS rank
+                       FROM scored)
+            SELECT q_id, c_id AS vec_id, score, CAST(rank AS INTEGER) AS rank
+            FROM ranked WHERE rank <= 3 ORDER BY q_id, rank
+        """
+        df = similarity.cosine_topk(q, corpus, k=3).orderBy("q_id", "rank")
+        res = compare(df, con, sql)
         assert res["value_match"] and res["strict_match"], res
+        assert res["rows_spark"] == 6
 
     def test_lsh_recall_on_identical(self, spark, corpus):
         q = spark.createDataFrame([("q1", [1.0, 0.0, 0.0])], ["q_id", "q_vec"])
@@ -506,60 +525,98 @@ class TestTextAnalysis:
         ]
         return spark.createDataFrame(rows, ["doc_id", "text"])
 
-    def test_sql_text_path_matches_column_path_tricky(self, tricky_docs):
-        key = lambda r: r["doc_id"]  # noqa: E731
-        fast = text.with_analysis(tricky_docs, "text")
-        slow = text._with_analysis_cols(tricky_docs, F.col("text"))
-        assert fast.schema == slow.schema
-        for a, b in zip(sorted(fast.collect(), key=key),
-                        sorted(slow.collect(), key=key)):
-            assert a == b
+    # with_analysis on tricky_docs, recorded from the Column-API builder
+    # (then kept beside the SQL-text one; the two agreed on every row)
+    TRICKY_SCHEMA = (
+        "struct<doc_id:string,text:string,n_tokens:int,n_bpe_tokens:int,"
+        "punct_ratio:double,stopword_ratio:double,avg_token_len:double,"
+        "quality:double,lang_id:string,fingerprint:string>")
+    TRICKY_ROWS = [
+        ("t1", None, None, None, 0.0, 0.0, 0.0, 0.6, "und",
+         "d41d8cd98f00b204e9800998ecf8427e"),
+        ("t2", "it's a 'quoted' doc", 4, 8, 0.15789473684210525, 0.25, 4.0,
+         0.474558, "und", "e5634d52718c5860161647298585a258"),
+        ("t3", "back\\slash and \\\\double, plus \\u0041 literal", 6, 12,
+         0.11363636363636363, 0.16666666666666666, 6.5, 0.422612, "en",
+         "ec12a5b0d19ece358c2173b2cdc4f1fb"),
+        ("t4", "café naïve 中文 words", 4, 4, 0.0, 0.0, 4.0, 0.3114, "und",
+         "9ee575323cd23dd5af898606f5e7c212"),
+        ("t5", "astral \U0001F600 emoji and \U00010348 gothic", 6, 6, 0.0,
+         0.16666666666666666, 3.6666666666666665, 0.582867, "en",
+         "defb4bbf6989ab996cdb0039dc07bb00"),
+        ("t6", "tabs\tand\nnewlines\x0band\fcontrols\r end", 6, 6, 0.0,
+         0.3333333333333333, 4.833333333333333, 0.721, "en",
+         "e47ac6120334efa92cb748930919332f"),
+    ]
 
-    def test_sql_str_round_trips_through_parser(self, spark):
-        # every char class _sql_str must escape, round-tripped through
-        # the live SQL parser — including an astral char (surrogate
-        # pair) and a string that LOOKS like an escape
-        cases = ["", "'", "\\", "\\\\", "\\u0041", "a'b\\c",
-                 "\t\n\x0b\f\r", "é中", "\U0001F600",
-                 "mix 'q' \\ \U00010348 \n end"]
-        for s in cases:
-            got = spark.sql(
-                f"SELECT {text._sql_str(s)} AS v").collect()[0]["v"]
-            assert got == s, repr(s)
+    def test_with_analysis_tricky_rows(self, tricky_docs):
+        out = text.with_analysis(tricky_docs, "text")
+        assert out.schema.simpleString() == self.TRICKY_SCHEMA
+        got = sorted((tuple(r) for r in out.collect()), key=lambda t: t[0])
+        assert got == self.TRICKY_ROWS
 
-    def test_sql_text_falls_back_on_escaped_string_literals(self, docs,
-                                                            spark):
-        # with the legacy parser conf on, the string fast path must
-        # route to the conf-immune Column composition (ADVICE r14)
+    @staticmethod
+    def _under_escaped_literals(spark, value, fn):
         key = "spark.sql.parser.escapedStringLiterals"
         old = spark.conf.get(key, "false")
         try:
-            spark.conf.set(key, "true")
-            out = text.with_analysis(docs, "text")
-            ref = text._with_analysis_cols(docs, F.col("text"))
-            k = lambda r: r["doc_id"]  # noqa: E731
-            assert sorted(out.collect(), key=k) == \
-                sorted(ref.collect(), key=k)
+            spark.conf.set(key, value)
+            return fn()
         finally:
             spark.conf.set(key, old)
 
-    def test_sql_text_path_matches_column_path(self, docs):
-        """The r14 SQL-text construction fast path (string ``col``) must
-        be value- AND schema-identical to the Column-API composition it
-        replaces — both for the stats bundle and the full analysis."""
-        fast = text.with_analysis(docs, "text")
-        slow = text._with_analysis_cols(docs, F.col("text"))
-        assert fast.schema == slow.schema
-        key = lambda r: r["doc_id"]  # noqa: E731
-        for a, b in zip(sorted(fast.collect(), key=key),
-                        sorted(slow.collect(), key=key)):
-            assert a == b
-        fast_s = text.with_text_stats(docs, "text")
-        slow_s = text._with_text_stats_cols(docs, F.col("text"))
-        assert fast_s.schema == slow_s.schema
-        for a, b in zip(sorted(fast_s.collect(), key=key),
-                        sorted(slow_s.collect(), key=key)):
-            assert a == b
+    def test_sql_str_round_trips_through_parser(self, spark):
+        # every char class _sql_str must protect, round-tripped through
+        # the live SQL parser under both escapedStringLiterals values —
+        # including an astral char and a string that LOOKS like an escape
+        cases = ["", "'", "\\", "\\\\", "\\u0041", "a'b\\c",
+                 "\t\n\x0b\f\r", "é中", "\U0001F600",
+                 "mix 'q' \\ \U00010348 \n end"]
+        for value in ("false", "true"):
+            for s in cases:
+                got = self._under_escaped_literals(
+                    spark, value, lambda: spark.sql(
+                        f"SELECT {text._sql_str(s)} AS v").collect()[0]["v"])
+                assert got == s, (value, repr(s))
+
+    def test_with_analysis_same_rows_under_escaped_string_literals(
+            self, spark, tricky_docs):
+        # the SQL-text builder's literals must parse to the same strings
+        # with the legacy parser conf on and off
+        def rows():
+            out = text.with_analysis(tricky_docs, "text")
+            return sorted((tuple(r) for r in out.collect()),
+                          key=lambda t: t[0])
+
+        for value in ("false", "true"):
+            assert self._under_escaped_literals(spark, value, rows) == \
+                self.TRICKY_ROWS, value
+
+    def test_with_analysis_matches_duckdb_oracle(self, docs):
+        """with_analysis and with_text_stats on ``docs`` equal the
+        ``text_analysis`` ledger entry's DuckDB oracle (regex forms),
+        column by column and type by type."""
+        import duckdb
+
+        import __spark_entry__ as entry
+        from _oracle import compare
+
+        con = duckdb.connect()
+        con.execute("CREATE TABLE documents (doc_id VARCHAR, text VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?)",
+                        [tuple(r) for r in docs.collect()])
+        oracle = entry._text_oracle()
+        cols = ["doc_id", "n_tokens", "n_bpe_tokens", "punct_ratio",
+                "stopword_ratio", "avg_token_len", "quality", "lang_id",
+                "fingerprint"]
+        out = text.with_analysis(docs, "text").select(*cols).orderBy("doc_id")
+        res = compare(out, con, oracle)
+        assert res["value_match"] and res["strict_match"], res
+        stats = cols[:6]
+        out_s = text.with_text_stats(docs, "text").select(*stats).orderBy("doc_id")
+        res_s = compare(out_s, con, f"SELECT {', '.join(stats)} "
+                                    f"FROM ({oracle}) ORDER BY doc_id")
+        assert res_s["value_match"] and res_s["strict_match"], res_s
 
 
 class TestMultimodal:

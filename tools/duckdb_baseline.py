@@ -21,7 +21,7 @@ BENCH_QUERIES = [
     "q_time_bucket", "mongo_filter_projection", "mongo_agg_pushdown",
     "mongo_count_pushdown", "mongo_topn_pushdown", "mongo_semi_join_in",
     "text_analysis", "dedup_minhash_signatures", "dedup_simhash",
-    "sim_cosine_topk", "sim_cosine_topk_vectorized",
+    "sim_cosine_topk",
 ]
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",

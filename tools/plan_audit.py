@@ -36,11 +36,8 @@ PATTERNS = {
 }
 
 
-# intentionally nested-loop plans: the exact cosine scorer broadcasts the
-# (small by contract) query side and scores every corpus row — the
-# documented O(|Q|x|C|) baseline the bucketed/ANN variants exist to avoid
+# intentionally nested-loop plans
 ALLOWED_NESTED = {
-    "sim_cosine_topk",  # r3: both exact kernels live in this one entry
     # merged A18+A19 entry: the $count path yields ONE row, cross-joined
     # onto the grouped result — a 1-row broadcast, not a real nested loop
     "mongo_count_pushdown",
@@ -121,7 +118,7 @@ def main() -> None:
             row = ["-"] * len(PATTERNS) + [f"ERROR: {msg}"]
         print(f"| {name} | " + " | ".join(row) + " |")
     print()
-    print(f"**Nested-loop/cartesian flags (excluding the documented broadcast-query exact scorers):** {flagged or 'none'}")
+    print(f"**Nested-loop/cartesian flags (excluding the documented 1-row count cross join):** {flagged or 'none'}")
 
 
 if __name__ == "__main__":
