@@ -138,13 +138,6 @@ class TestAsofJoin:
             # by key present on right only must fail at the API, not as
             # an unresolved-column error inside the window expression
             asof_join(df.drop("k"), df, on="t", by=["k"])
-        tb = spark.createDataFrame([(1, 1.0, 2.0)], "k int, t double, v double")
-        with pytest.raises(ValueError, match="tie_break"):
-            asof_join(tb, tb, on="t", tie_break="missing")
-        with pytest.raises(ValueError, match="tie_break"):
-            asof_join(tb, tb, on="t", by=["k"], tie_break="k")
-        with pytest.raises(ValueError, match="salt"):
-            asof_join(tb, tb, on="t", by=["k"], salt=1)
 
     def test_null_times_never_match(self, spark):
         # SQL/DuckDB ASOF: NULL never matches — null-t left rows keep
@@ -238,6 +231,18 @@ class TestAsofTieBreakAndStrategies:
             assert rows["5.0"] == (
                 "early" if direction != "forward" else None
             ), direction
+
+    def test_rejects_bad_strategy_args(self, spark):
+        df = spark.createDataFrame([(1, 1.0, 2.0)], "k int, t double, v double")
+        # the window plan is the only plan: there is no strategy to pick
+        with pytest.raises(TypeError, match="strategy"):
+            asof_join(df, df, on="t", strategy="broadcast")
+        with pytest.raises(ValueError, match="tie_break"):
+            asof_join(df, df, on="t", tie_break="missing")
+        with pytest.raises(ValueError, match="tie_break"):
+            asof_join(df, df, on="t", by=["k"], tie_break="k")
+        with pytest.raises(ValueError, match="salt"):
+            asof_join(df, df, on="t", by=["k"], salt=1)
 
 
 class TestAsofSelfJoin:
