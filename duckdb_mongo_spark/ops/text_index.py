@@ -25,14 +25,14 @@ pass (cold path unchanged). Backends without a durable fingerprint (the
 wire fake, in-memory backends) keep the whole term dictionary in the
 process cache instead of on disk — bounded by ``_MEM_TERMS_CAP``.
 
-Scale notes (100 TB): the build is two bounded-shuffle jobs — one
-aggregate row for the summary, one ``groupBy(term)`` for the dictionary
-(vocabulary-sized output, written ``repartitionByRange(term)`` +
-sorted-within-partitions so every file covers a term range). Query-time
-lookup reads only the row groups whose [min, max] term range covers a
-query term (pyarrow dataset filter against parquet row-group
-statistics) — a handful of KB per query regardless of corpus size. No
-resident driver memory scales with the corpus.
+Scale notes (100 TB): the build is one tokenizer pass feeding one
+``groupBy(term)`` for the dictionary (vocabulary-sized output, written
+``repartitionByRange(term)`` + sorted-within-partitions so every file
+covers a term range); the summary row rides that job as observed
+metrics. Query-time lookup reads only the row groups whose [min, max]
+term range covers a query term (pyarrow dataset filter against parquet
+row-group statistics) — a handful of KB per query regardless of corpus
+size. No resident driver memory scales with the corpus.
 """
 
 from __future__ import annotations
@@ -248,21 +248,31 @@ def build_path_stats(backend, db, coll, bdf, fs, analyze_fn,
         _gc_stale_versions,
     )
 
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql import Observation
+
     global build_count
     key = _cache_key(backend, db, coll, fs.mongo_path, analyzer_key)
-    tdf = _tokens_df(bdf, fs, analyze_fn)
-    row = tdf.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.size("__toks")).alias("total"),
-        _nonascii_flag(fs).alias("mb"),
-    ).collect()[0]
-    n_docs = int(row["n"] or 0)
-    total_len = int(row["total"] or 0)
-    multibyte = bool(row["mb"])
+    # the summary (N, total length, multibyte flag) is observed inside
+    # the term-dictionary job, so the tokenizer runs once per build
+    stats = [F.count(F.lit(1)).alias("n"),
+             F.sum(F.size("__toks")).alias("total"),
+             _nonascii_flag(fs).alias("mb")]
+    obs = Observation()
+    tdf = _tokens_df(bdf, fs, analyze_fn).observe(obs, *stats)
     terms = (
         tdf.select(F.explode(F.array_distinct("__toks")).alias("term"))
         .groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     )
+
+    def summary():
+        try:
+            row = obs.get
+        except Py4JJavaError:
+            # no metrics: a zero-row input folds the plan to an empty
+            # relation and Spark drops the observation with it
+            row = _tokens_df(bdf, fs, analyze_fn).agg(*stats).collect()[0].asDict()
+        return (int(row["n"] or 0), int(row["total"] or 0), bool(row["mb"]))
 
     durable = key[1] is not None and not isinstance(key[1], int)
     if not durable:
@@ -272,6 +282,7 @@ def build_path_stats(backend, db, coll, bdf, fs, analyze_fn,
                 f"text stats for {coll}.{fs.mongo_path}: vocabulary "
                 f"exceeds {_MEM_TERMS_CAP} terms and the backend has no "
                 "durable fingerprint for an on-disk sidecar")
+        n_docs, total_len, multibyte = summary()
         idx = TextStatsIndex(
             n_docs=n_docs, total_len=total_len, multibyte=multibyte,
             analyzer_key=analyzer_key, mongo_path=fs.mongo_path,
@@ -286,11 +297,15 @@ def build_path_stats(backend, db, coll, bdf, fs, analyze_fn,
     os.makedirs(vdir, exist_ok=True)
     # one file per ~250k docs of corpus (vocabulary grows sublinearly);
     # range-partitioned + sorted so every file/row-group covers one term
-    # range and query-time isin() pushdown prunes to a handful of pages
-    nparts = max(1, min(256, (n_docs // 250_000) + 1))
-    (terms.repartitionByRange(nparts, "term")
+    # range and query-time isin() pushdown prunes to a handful of pages.
+    # The doc count here is only a layout hint: the backend's metadata
+    # count, else AQE sizes the range partitions.
+    n_hint = backend.fast_count(db, coll)
+    nparts = () if n_hint is None else (max(1, min(256, n_hint // 250_000 + 1)),)
+    (terms.repartitionByRange(*nparts, "term")
      .sortWithinPartitions("term")
      .write.mode("overwrite").parquet(os.path.join(vdir, "terms")))
+    n_docs, total_len, multibyte = summary()
     meta = {"version": _META_VERSION, "n_docs": n_docs,
             "total_len": total_len, "multibyte": multibyte,
             "analyzer_key": analyzer_key, "mongo_path": fs.mongo_path}

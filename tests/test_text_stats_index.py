@@ -18,9 +18,14 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from duckdb_mongo_spark.backends import ParquetBackend
+from duckdb_mongo_spark.backends import JsonlBackend, ParquetBackend
 from duckdb_mongo_spark.ops import text_index
 from duckdb_mongo_spark.scan import mongo_scan
+
+# jobs one durable sidecar build may launch: the tokenizer pass feeds the
+# term groupBy, the range-partition sample and the dictionary write; the
+# summary row rides that job as observed metrics
+TEXT_INDEX_BUILD_MAX_JOBS = 3
 
 PIPE = [
     {"$search": {"text": {"query": "spark vector merge", "path": "text"}}},
@@ -262,3 +267,102 @@ class TestMemoryBackend:
         with pytest.raises(ValueError, match="not a string path"):
             text_index.build_text_stats_index(
                 spark, be, "main", "documents", paths=["doc_id"])
+
+
+ORACLE_TEXTS = [
+    "Spark is a FAST engine; spark, spark!",
+    None,
+    "Café für Spark-Nutzer",
+    "",
+    "merge sort beats bubble sort",
+    "москва spark café 42",
+    "spark merge spark merge",
+]
+
+
+def _oracle(texts):
+    """Plain-Python statistics over the collection with the contract
+    analyzer: (n_docs, total_len, multibyte, sorted (term, df))."""
+    from collections import Counter
+
+    from duckdb_mongo_spark.mql.search import _analyze
+
+    toks = [_analyze(t) if t is not None else [] for t in texts]
+    dfs = Counter(term for ts in toks for term in set(ts))
+    multibyte = any(len((t or "").encode()) != len(t or "") for t in texts)
+    return (len(texts), sum(len(ts) for ts in toks), multibyte,
+            sorted(dfs.items()))
+
+
+def _sidecar_stats(idx):
+    if idx.mem_dfs is not None:
+        rows = sorted(idx.mem_dfs.items())
+    else:
+        t = pq.read_table(idx.terms_dir)
+        rows = sorted(zip(t.column("term").to_pylist(), t.column("df").to_pylist()))
+    return idx.n_docs, idx.total_len, idx.multibyte, rows
+
+
+class TestBuildOracle:
+    def test_durable_sidecar_matches_python_oracle(self, spark, tmp_path):
+        d = str(tmp_path)
+        _write_corpus(d, ORACLE_TEXTS)
+        be = ParquetBackend(d, db_name="main", id_field="doc_id")
+        built = text_index.build_text_stats_index(
+            spark, be, "main", "documents", paths=["text"])
+        assert built["text"].sidecar is not None
+        assert _sidecar_stats(built["text"]) == _oracle(ORACLE_TEXTS)
+
+    def test_sidecar_without_metadata_count_matches_python_oracle(self, spark, tmp_path):
+        # JSONL has a fingerprint (durable sidecar) but no metadata count,
+        # so the dictionary's range partitions are sized by AQE
+        import json
+
+        os.makedirs(tmp_path / "main")
+        with open(tmp_path / "main" / "documents.jsonl", "w") as f:
+            for i, t in enumerate(ORACLE_TEXTS):
+                f.write(json.dumps({"_id": i, "text": t}) + "\n")
+        be = JsonlBackend(str(tmp_path))
+        assert be.fast_count("main", "documents") is None
+        built = text_index.build_text_stats_index(
+            spark, be, "main", "documents", paths=["text"])
+        assert built["text"].sidecar is not None
+        assert _sidecar_stats(built["text"]) == _oracle(ORACLE_TEXTS)
+
+    def test_in_memory_sidecar_matches_python_oracle(self, spark, tmp_path):
+        class NoFpBackend(ParquetBackend):
+            def fingerprint(self, db, coll):
+                return None
+
+        d = str(tmp_path)
+        _write_corpus(d, ORACLE_TEXTS)
+        be = NoFpBackend(d, db_name="main", id_field="doc_id")
+        built = text_index.build_text_stats_index(
+            spark, be, "main", "documents", paths=["text"])
+        assert built["text"].mem_dfs is not None
+        assert _sidecar_stats(built["text"]) == _oracle(ORACLE_TEXTS)
+
+    def test_empty_collection(self, spark, tmp_path):
+        d = str(tmp_path)
+        _write_corpus(d, [], ids=[])
+        be = ParquetBackend(d, db_name="main", id_field="doc_id")
+        built = text_index.build_text_stats_index(
+            spark, be, "main", "documents", paths=["text"],
+            columns={"doc_id": "BIGINT", "text": "VARCHAR"})
+        assert _sidecar_stats(built["text"]) == (0, 0, False, [])
+
+    def test_build_job_count_guard(self, spark, tmp_path):
+        d = str(tmp_path)
+        _write_corpus(d, ORACLE_TEXTS * 4)
+        be = ParquetBackend(d, db_name="main", id_field="doc_id")
+        sc = spark.sparkContext
+        group = "text-index-build-job-count-guard"
+        sc.setJobGroup(group, "text index build job count")
+        try:
+            text_index.build_text_stats_index(
+                spark, be, "main", "documents", paths=["text"])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert n_jobs <= TEXT_INDEX_BUILD_MAX_JOBS, n_jobs
