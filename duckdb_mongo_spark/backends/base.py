@@ -7,6 +7,8 @@ mongocxx in /root/reference/src/mongo_table_function.cpp:280-724):
 - ``aggregate(db, coll, pipeline)``             — run a pipeline
 - ``sample(db, coll, n, seed)``                 — random sample (schema inference)
 - ``count(db, coll, filter)``                   — server-side count
+- ``bounded_count(db, coll, cap)``              — NEW: unfiltered count
+  exact up to ``cap`` (the size gates' probe; memoized per fingerprint)
 - ``partitions(db, coll, n)``                   — NEW vs reference: split the
   collection into ≤n independently scannable splits so Spark executors can
   read in parallel (the reference uses a single cursor; SURVEY.md §4.2
@@ -18,6 +20,7 @@ the Python DataSource reader).
 
 from __future__ import annotations
 
+import itertools
 from abc import ABC, abstractmethod
 from collections.abc import Iterable, Iterator
 
@@ -48,8 +51,6 @@ class DocumentBackend(ABC):
         Local backends probe only the first ``probe_limit`` docs — a
         schema doc is by convention at the head of the collection; remote
         backends use an indexed lookup instead."""
-        import itertools
-
         for doc in itertools.islice(self.iter_documents(db, coll), probe_limit):
             if doc.get("_id") == "__schema":
                 return doc
@@ -141,6 +142,34 @@ class DocumentBackend(ABC):
         # datasource._docs_for), filtered or not
         docs = self.find(db, coll, filter=filter)
         return sum(1 for d in docs if d.get("_id") != "__schema")
+
+    def bounded_count(self, db, coll, cap: int) -> int:
+        """Unfiltered document count, exact up to ``cap``: returns
+        ``cap + 1`` for any larger collection — the size gates only ask
+        "is it at most cap?", so a huge collection costs at most one
+        probe of ``cap + 1`` documents, never a full pass.
+
+        A metadata count (``fast_count``) answers without a scan.
+        Otherwise the probe streams ``iter_documents`` (sentinel
+        excluded, as in ``count``) and is memoized per ``fingerprint()``:
+        an append or rewrite changes the fingerprint and re-probes; a
+        backend without one (None) is probed every call. A memoized
+        "more than N" answers every cap below N; an exact count answers
+        every cap."""
+        n = self.fast_count(db, coll)
+        if n is not None:
+            return min(n, cap + 1)
+        fp = self.fingerprint(db, coll)
+        memo = self.__dict__.setdefault("_bounded_count_memo", {})
+        hit = memo.get((db, coll)) if fp is not None else None
+        if hit is not None and hit[0] == fp and (hit[2] or hit[1] > cap):
+            return min(hit[1], cap + 1)
+        docs = (d for d in self.iter_documents(db, coll)
+                if d.get("_id") != "__schema")
+        seen = sum(1 for _ in itertools.islice(docs, cap + 1))
+        if fp is not None:
+            memo[(db, coll)] = (fp, seen, seen <= cap)
+        return seen
 
     def partitions(self, db: str, coll: str, n: int) -> list["ScanPartition"]:
         """Split a collection into ≤n partitions. Default: one partition."""

@@ -64,6 +64,12 @@ class CsvBackend(DocumentBackend):
     def _path(self, db, coll):
         return os.path.join(self.root, db, f"{coll}.csv")
 
+    def fingerprint(self, db, coll):
+        path = self._path(db, coll)
+        if not os.path.isfile(path):
+            return None
+        return ((path, os.path.getsize(path), os.path.getmtime(path)),)
+
     def list_databases(self):
         return sorted(
             d for d in os.listdir(self.root)

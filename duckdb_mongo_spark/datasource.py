@@ -78,14 +78,16 @@ def guard_single_stream_aggregate(backend, db: str, coll: str) -> None:
     if cap <= 0 or getattr(backend, "is_remote", False):
         return
     try:
-        n = backend.count(db, coll)  # metadata-cheap on columnar backends
+        # metadata-cheap on columnar backends; a file backend probes at
+        # most cap + 1 documents once per file version
+        n = backend.bounded_count(db, coll, cap)
     except Exception:
         return
     if n > cap:
         raise ValueError(
             f"manual pipeline with non-record-wise stages on local "
-            f"collection {db}.{coll} ({n} docs) would run single-stream "
-            f"through the Python interpreter (cap {cap}). Use the engine "
+            f"collection {db}.{coll} (more than {cap} docs) would run "
+            f"single-stream through the Python interpreter. Use the engine "
             f"API (distributed aggregation), restrict the pipeline to "
             f"record-wise stages ($match/$project/$addFields/$set/"
             f"$unwind), or raise SPARK_GRAFT_AGG_MAX_DOCS."
@@ -341,11 +343,7 @@ class _MongoScanReaderNoPushdown(DataSourceReader):
             yield from fast
             return
         schema = planned.output_schema
-        rows = []
-        for doc in self._result_docs(partition):
-            row = flatten_document(doc, schema, self.mode)
-            if row is not None:
-                rows.append(row)
+        rows = flatten_rows(self._result_docs(partition), schema, self.mode)
         if not self.use_arrow:
             yield from (tuple(r) for r in rows)
             return
@@ -394,6 +392,23 @@ def _arrow_type(t):
         "BLOB": pa.binary(),
         "HUGEINT": pa.decimal128(38, 0),
     }[t]
+
+
+def flatten_rows(docs, schema, mode, cap=None):
+    """Flatten result documents into row lists ordered per
+    ``schema.fields`` — the one document-to-row step of every row
+    materialization (the DataSource read, the direct paths and the
+    routed tails), so they cannot diverge. Rows DROPMALFORMED drops are
+    skipped; FAILFAST raises ``SchemaEnforcementError``. Returns None
+    as soon as more than ``cap`` rows survive."""
+    rows = []
+    for doc in docs:
+        row = flatten_document(doc, schema, mode)
+        if row is not None:
+            rows.append(row)
+            if cap is not None and len(rows) > cap:
+                return None
+    return rows
 
 
 def _to_arrow_batches(rows, schema):

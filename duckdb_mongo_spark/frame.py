@@ -44,6 +44,13 @@ DIRECT_AGG_MAX_ROWS = int(_os.environ.get("SPARK_GRAFT_DIRECT_AGG_ROWS", "100000
 DIRECT_SCAN_MAX_CELLS = int(
     _os.environ.get("SPARK_GRAFT_DIRECT_SCAN_CELLS", "1000000")
 )
+# The row path (JSONL/CSV: flatten and Arrow build on the driver) gets
+# 1/ROW_SCAN_CELLS_DIVISOR of that budget. Measured on 5-column JSONL
+# orders (tools/row_path_crossover.py, 4 vCPUs, medians of 5): a
+# full-output scan wins at 80k rows (2.37 vs 2.92 s), ties at 100-120k
+# (2.61 vs 2.47, 3.52 vs 3.56 s) and loses at 150k (5.35 vs 4.31 s);
+# a 1%-selective filter wins at every size up to 250k (5.00 vs 5.58 s).
+ROW_SCAN_CELLS_DIVISOR = 2
 
 # Per-(backend-fingerprint, db, coll, column) multibyte-text flags for
 # routed $search: once a path is known pure-ASCII (JVM tokenizer) or
@@ -465,16 +472,26 @@ class MongoFrame:
         distributed scan only adds overhead. Scale contract:
 
         - find-shaped scans qualify only when the WHOLE collection is
-          broadcast-class (row count ≤ DIRECT_SCAN_MAX_ROWS, metadata
-          lookup) — a 100 TB collection always takes the partitioned
-          executor scan;
+          broadcast-class: row count ≤ DIRECT_SCAN_MAX_ROWS and rows ×
+          output columns ≤ DIRECT_SCAN_MAX_CELLS (1/ROW_SCAN_CELLS_DIVISOR
+          of it on the row path). The count is the backend's
+          ``bounded_count`` against that cap: a metadata count on
+          columnar backends, a probe of at most cap + 1 documents
+          memoized per file version on JSONL/CSV — so a 100 TB
+          collection always takes the partitioned executor scan, after
+          at most one bounded probe. Columnar backends serve the scan as
+          Arrow (``arrow_scan``); other LOCAL backends (JSONL, CSV) take
+          the row path. Remote backends keep their per-partition server
+          cursors (datasource);
         - fully-pushed single-stream pipelines ($count / $sort+$limit /
           $group) qualify with a result-row cap (DIRECT_AGG_MAX_ROWS);
           crossing the cap abandons the direct result and falls back to
           the partitioned datasource path (always-correct fallback);
         - execution reuses the datasource reader's OWN code paths
-          (_try_arrow_fast_path / _result_docs) so the two paths cannot
-          diverge semantically.
+          (_try_arrow_fast_path, or _result_docs + flatten_rows +
+          _to_arrow_batches) so the two paths cannot diverge
+          semantically. FAILFAST row scans stay on the datasource,
+          where a non-conforming document raises at action time.
 
         Returns None when the scan doesn't qualify (residuals are fine —
         df() applies them on top either way).
@@ -484,16 +501,22 @@ class MongoFrame:
         from duckdb_mongo_spark.datasource import (
             _MongoScanReaderNoPushdown,
             _Part,
-            _to_arrow_batches,
+            flatten_rows,
         )
-        from duckdb_mongo_spark.schema.flatten import SchemaMode, flatten_document
-        from duckdb_mongo_spark.schema.types import to_spark_schema
+        from duckdb_mongo_spark.schema.flatten import SchemaMode
 
         reader = _MongoScanReaderNoPushdown(payload)
         part = _Part(None)
-        batches = None
+        mode = SchemaMode.parse(self.schema_mode)
         if planned.method == "find":
-            if not hasattr(self.backend, "arrow_scan"):
+            columnar = hasattr(self.backend, "arrow_scan")
+            if not columnar and (getattr(self.backend, "is_remote", False)
+                                 or mode is SchemaMode.FAILFAST):
+                # remote: each executor pulls its own filtered server
+                # cursor; FAILFAST: a non-conforming document must raise
+                # at action time (PythonException wrapping
+                # SchemaEnforcementError), as it always has — the arrow
+                # branch declines the non-PERMISSIVE modes the same way
                 return None
             if self._aggs is not None and self.direct is not True:
                 # a Spark-side aggregation follows this scan: the
@@ -516,21 +539,40 @@ class MongoFrame:
                 # the same reasoning as the r12 agg-shape decline below.
                 return None
             if self.direct is not True:
-                if DIRECT_SCAN_MAX_ROWS <= 0:
+                cells = DIRECT_SCAN_MAX_CELLS // (
+                    1 if columnar else ROW_SCAN_CELLS_DIVISOR)
+                cap = min(DIRECT_SCAN_MAX_ROWS,
+                          cells // max(1, len(planned.output_schema.fields)))
+                if cap <= 0:
                     return None
                 try:
-                    n = self.backend.count(self.db, self.coll)
-                except Exception:
+                    n = self.backend.bounded_count(self.db, self.coll, cap)
+                except (KeyError, OSError, ValueError):
+                    # missing or unreadable collection, undecodable
+                    # document: the datasource path raises it at action
+                    # time, where callers have always seen it
                     return None
-                if n > DIRECT_SCAN_MAX_ROWS:
+                if n > cap:
                     return None
-                if n * len(planned.output_schema.fields) > DIRECT_SCAN_MAX_CELLS:
-                    return None
-            it = reader._try_arrow_fast_path(part)
-            if it is None:
-                return None  # non-arrow dialect / mode — datasource path
-            batches = list(it)
-        elif planned.method == "aggregate" and not planned.parallelizable:
+            if columnar:
+                it = reader._try_arrow_fast_path(part)
+                if it is None:
+                    return None  # non-arrow dialect / mode — datasource path
+                return self._arrow_df(list(it), planned.output_schema)
+            import pyarrow as pa
+
+            try:
+                rows = flatten_rows(
+                    reader._result_docs(part), planned.output_schema, mode)
+                return self._rows_df(rows, planned.output_schema)
+            except (KeyError, OSError, ValueError, pa.ArrowException):
+                # the same reader code raises the same error on the
+                # datasource path, at action time — fall back so an
+                # unpinned query keeps that surface
+                if self.direct is True:
+                    raise
+                return None
+        if planned.method == "aggregate" and not planned.parallelizable:
             # size guard BEFORE the swallow-and-fallback try below: a
             # local collection past the single-stream cap must fail
             # loudly here too, not fall through to the identical
@@ -563,23 +605,29 @@ class MongoFrame:
             cap = None if self.direct is True else DIRECT_AGG_MAX_ROWS
             if cap is not None and cap <= 0:
                 return None
-            mode = SchemaMode.parse(self.schema_mode)
-            rows = []
             try:
-                for doc in reader._result_docs(part):
-                    row = flatten_document(doc, planned.output_schema, mode)
-                    if row is not None:
-                        rows.append(row)
-                        if cap is not None and len(rows) > cap:
-                            return None  # result too big — partitioned path
+                rows = flatten_rows(
+                    reader._result_docs(part), planned.output_schema, mode, cap)
             except Exception:
                 if self.direct is True:
                     raise
                 return None
-            batches = list(_to_arrow_batches(rows, planned.output_schema))
-        else:
-            return None
-        spark_schema = to_spark_schema(planned.output_schema.fields)
+            if rows is None:
+                return None  # result too big — partitioned path
+            return self._rows_df(rows, planned.output_schema)
+        return None
+
+    def _rows_df(self, rows, schema) -> DataFrame:
+        """DataFrame over flattened rows, batched exactly as the
+        DataSource read batches them."""
+        from duckdb_mongo_spark.datasource import _to_arrow_batches
+
+        return self._arrow_df(list(_to_arrow_batches(rows, schema)), schema)
+
+    def _arrow_df(self, batches, schema) -> DataFrame:
+        from duckdb_mongo_spark.schema.types import to_spark_schema
+
+        spark_schema = to_spark_schema(schema.fields)
         if not batches:
             return self.spark.createDataFrame([], schema=spark_schema)
         import pyarrow as pa
@@ -4642,28 +4690,12 @@ class MongoFrame:
     def _flatten_interpreted(self, results, tag) -> DataFrame:
         """Flatten interpreter output docs to the frame's pipeline-output
         schema (shared by every routed path's tail)."""
-        from duckdb_mongo_spark.datasource import _to_arrow_batches
-        from duckdb_mongo_spark.schema.flatten import (
-            SchemaMode,
-            flatten_document,
-        )
-        from duckdb_mongo_spark.schema.types import to_spark_schema
+        from duckdb_mongo_spark.datasource import flatten_rows
+        from duckdb_mongo_spark.schema.flatten import SchemaMode
 
-        mode = SchemaMode.parse(self.schema_mode)
-        out_rows = []
-        for doc in results:
-            row = flatten_document(doc, self.schema, mode)
-            if row is not None:
-                out_rows.append(row)
-        spark_schema = to_spark_schema(self.schema.fields)
+        rows = flatten_rows(results, self.schema, SchemaMode.parse(self.schema_mode))
         self.last_exec_path = tag
-        if not out_rows:
-            return self.spark.createDataFrame([], schema=spark_schema)
-        import pyarrow as pa
-
-        batches = list(_to_arrow_batches(out_rows, self.schema))
-        return self.spark.createDataFrame(
-            pa.Table.from_batches(batches), schema=spark_schema)
+        return self._rows_df(rows, self.schema)
 
     def _routed_tail(self, scored, limit, meta_name, score_col, rest,
                      coll_schema, tag):

@@ -280,6 +280,26 @@ def cosine_topk(
     )
 
 
+def fixed_layout_sample(df: DataFrame, order_col: str, n: int,
+                        cols: list[str]) -> tuple[DataFrame, int]:
+    """The first ``n`` rows of ``df`` in ``order_col`` order, projected
+    to ``cols`` and laid out in ``defaultParallelism`` contiguous
+    slices of that order; returns ``(sample, rows in it)``.
+
+    Fit input for Spark ML KMeans, whose k-means|| initialisation
+    samples per partition: fitting a frame as planned makes the same
+    seed give different centroids on different scan layouts (one
+    parquet split vs a direct path's four slices, a range exchange's
+    session-dependent bounds). The sample is bounded by ``n`` — the
+    only rows that reach the driver."""
+    spark = df.sparkSession
+    rows = df.orderBy(order_col).limit(n).select(*cols).collect()
+    sc = spark.sparkContext
+    sample = spark.createDataFrame(
+        sc.parallelize(rows, sc.defaultParallelism), df.select(*cols).schema)
+    return sample, len(rows)
+
+
 def ivf_index(
     corpus: DataFrame,
     n_centroids: int = 16,
@@ -305,14 +325,11 @@ def ivf_index(
     c = ensure_min_parallelism(corpus).select(
         F.col(c_id).alias("c_id"), _as_double(F.col(c_vec)).alias("cv")
     ).withColumn("features", array_to_vector(F.col("cv")))
-    # deterministic fit sample: the first fit_sample_size ids in id
-    # order (TakeOrderedAndProject — per-partition top-K + merge, no
-    # full sort) — a bare limit() would pick a partition-order-dependent
-    # subset and the same seed would yield different centroids
-    fit_df = c.orderBy("c_id").limit(fit_sample_size).select("features")
-    # tiny-corpus guard: count the SAMPLE (bounded by fit_sample_size),
-    # never the corpus
-    n_fit = fit_df.count()
+    # deterministic fit sample in a fixed layout: a bare limit() would
+    # pick a partition-order-dependent subset, and fitting the frame as
+    # planned would let k-means|| init follow the corpus's partitioning
+    fit_df, n_fit = fixed_layout_sample(c, "c_id", fit_sample_size, ["features"])
+    # tiny-corpus guard: the SAMPLE size (bounded by fit_sample_size)
     n_centroids = max(1, min(n_centroids, n_fit))
     model = KMeans(k=n_centroids, seed=seed, featuresCol="features",
                    predictionCol="centroid_id").fit(fit_df)

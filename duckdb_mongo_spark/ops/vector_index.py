@@ -346,20 +346,15 @@ def get_collection_vector_index(
         fit_src = valid
         feat_arr = vec
     feat = fit_src.withColumn("__features", array_to_vector(feat_arr))
-    # bounded deterministic sample (orderBy the id column — same stance
-    # as ivf_index's orderBy(c_id)), fitted in a fixed layout: id order
-    # in defaultParallelism contiguous slices. k-means|| init samples per
-    # partition, so fitting the frame as planned made the cells follow
-    # the scan path and the session's range-exchange sampling.
-    rows = feat.orderBy(id_name).limit(_fit_sample()).select(
-        "__features").collect()
-    n_fit = len(rows)
+    # bounded deterministic sample in a fixed layout, as ivf_index fits:
+    # the cells must not follow the scan path or the session's
+    # range-exchange sampling
+    from duckdb_mongo_spark.ops.similarity import fixed_layout_sample
+
+    sample_src, n_fit = fixed_layout_sample(
+        feat, id_name, _fit_sample(), ["__features"])
     if n_fit == 0:
         return None  # nothing to fit (e.g. all-zero cos corpus) — exact path
-    sc = bdf.sparkSession.sparkContext
-    sample_src = bdf.sparkSession.createDataFrame(
-        sc.parallelize(rows, sc.defaultParallelism),
-        feat.select("__features").schema)
     k_env = os.environ.get("SPARK_GRAFT_IVF_CENTROIDS")
     k = int(k_env) if k_env else max(1, min(1024, round(math.sqrt(n_fit) * 2)))
     k = min(k, n_fit)

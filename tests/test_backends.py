@@ -13,7 +13,12 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from duckdb_mongo_spark.backends import JsonlBackend, MemoryBackend, ParquetBackend
+from duckdb_mongo_spark.backends import (
+    CsvBackend,
+    JsonlBackend,
+    MemoryBackend,
+    ParquetBackend,
+)
 from duckdb_mongo_spark.backends import jsonl as jsonl_mod
 from duckdb_mongo_spark.bsonlike import ObjectId
 
@@ -211,3 +216,97 @@ class TestMemoryPartitions:
         assert len(parts) >= 2
         ids = [d["_id"] for d in docs]
         assert len(ids) == 2500 and len(set(ids)) == 2500
+
+
+class TestBoundedCount:
+    """``bounded_count``: exact up to the cap, ``cap + 1`` beyond it, the
+    probe memoized per ``fingerprint()``."""
+
+    @staticmethod
+    def _write(path, ids):
+        with open(path, "a") as f:
+            for i in ids:
+                f.write(json.dumps({"_id": i, "v": i}) + "\n")
+
+    @staticmethod
+    def _count_reads(monkeypatch, be):
+        """Count the documents the backend's full scan yields."""
+        seen = {"docs": 0}
+        inner = be.iter_documents
+
+        def counting(db, coll):
+            for d in inner(db, coll):
+                seen["docs"] += 1
+                yield d
+
+        monkeypatch.setattr(be, "iter_documents", counting)
+        return seen
+
+    def test_probe_stops_at_cap_plus_one(self, tmp_path, monkeypatch):
+        (tmp_path / "db").mkdir()
+        self._write(tmp_path / "db" / "c.jsonl", range(100))
+        be = JsonlBackend(str(tmp_path))
+        seen = self._count_reads(monkeypatch, be)
+        assert be.bounded_count("db", "c", 5) == 6
+        assert seen["docs"] == 6
+        # "more than 5" also answers a smaller cap, without a probe
+        assert be.bounded_count("db", "c", 3) == 4
+        assert seen["docs"] == 6
+        # a larger cap needs a fresh probe; an exact count answers any cap
+        assert be.bounded_count("db", "c", 1000) == 100
+        assert seen["docs"] == 106
+        assert be.bounded_count("db", "c", 50) == 51
+        assert be.bounded_count("db", "c", 10**9) == 100
+        assert seen["docs"] == 106
+
+    def test_append_invalidates_memo(self, tmp_path, monkeypatch):
+        (tmp_path / "db").mkdir()
+        path = tmp_path / "db" / "c.jsonl"
+        self._write(path, range(3))
+        be = JsonlBackend(str(tmp_path))
+        seen = self._count_reads(monkeypatch, be)
+        assert be.bounded_count("db", "c", 100) == 3
+        assert be.bounded_count("db", "c", 100) == 3
+        assert seen["docs"] == 3  # second call: memo hit
+        self._write(path, [3])
+        assert be.bounded_count("db", "c", 100) == 4
+        assert seen["docs"] == 7
+
+    def test_sentinel_excluded(self, tmp_path):
+        (tmp_path / "db").mkdir()
+        path = tmp_path / "db" / "c.jsonl"
+        path.write_text(json.dumps({"_id": "__schema", "v": "BIGINT"}) + "\n")
+        self._write(path, range(4))
+        be = JsonlBackend(str(tmp_path))
+        assert be.bounded_count("db", "c", 100) == 4 == be.count("db", "c")
+        assert be.bounded_count("db", "c", 3) == 4
+
+    def test_memory_backend_never_memoized(self):
+        be = MemoryBackend()
+        be.insert_many("db", "c", [{"_id": i} for i in range(5)])
+        assert be.bounded_count("db", "c", 100) == 5
+        be.insert_many("db", "c", [{"_id": 5}])
+        assert be.bounded_count("db", "c", 100) == 6
+        assert be.__dict__.get("_bounded_count_memo", {}) == {}
+
+    def test_csv_memoized_per_file_version(self, tmp_path, monkeypatch):
+        (tmp_path / "db").mkdir()
+        path = tmp_path / "db" / "c.csv"
+        path.write_text("k,v\n1,a\n2,b\n")
+        be = CsvBackend(str(tmp_path))
+        seen = self._count_reads(monkeypatch, be)
+        assert be.bounded_count("db", "c", 10) == 2
+        assert be.bounded_count("db", "c", 10) == 2
+        assert seen["docs"] == 2
+        with open(path, "a") as f:
+            f.write("3,c\n")
+        assert be.bounded_count("db", "c", 10) == 3
+
+    def test_parquet_uses_metadata_count(self, tmp_path, monkeypatch):
+        pq.write_table(pa.table({"k": pa.array(range(20), pa.int64())}),
+                       tmp_path / "c.parquet")
+        be = ParquetBackend(str(tmp_path), id_field="k")
+        seen = self._count_reads(monkeypatch, be)
+        assert be.bounded_count("main", "c", 100) == 20
+        assert be.bounded_count("main", "c", 5) == 6
+        assert seen["docs"] == 0

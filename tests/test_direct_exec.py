@@ -514,3 +514,241 @@ class TestTopNRoute:
         out = f.df()
         assert f.last_exec_path == "direct"
         assert out.count() == 7
+
+
+def _jsonl_docs():
+    """Nested, sparse, extended-JSON documents: ObjectId ids, dates,
+    decimals, nulls and absent fields."""
+    docs = []
+    for i in range(60):
+        d = {
+            "_id": {"$oid": f"{i:024x}"},
+            "status": ["a", "b", "c", None][i % 4],
+            "price": float(i) * 1.5,
+            "when": {"$date": f"2024-01-{1 + i % 28:02d}T0{i % 10}:30:00Z"},
+            "amount": {"$numberDecimal": f"{i}"},
+        }
+        if i % 5:
+            d["address"] = {"city": f"c{i % 3}", "geo": {"lat": i / 7}}
+        if i % 7 == 0:
+            del d["status"]
+        docs.append(d)
+    return docs
+
+
+@pytest.fixture(scope="module")
+def jsonl_root(tmp_path_factory):
+    import json
+
+    root = tmp_path_factory.mktemp("direct_jsonl")
+    (root / "main").mkdir()
+    with open(root / "main" / "orders.jsonl", "w") as f:
+        for d in _jsonl_docs():
+            f.write(json.dumps(d) + "\n")
+    with open(root / "main" / "declared.jsonl", "w") as f:
+        f.write(json.dumps({"_id": "__schema", "v": "BIGINT",
+                            "name": "VARCHAR"}) + "\n")
+        for i in range(30):
+            v = "oops" if i == 7 else i
+            f.write(json.dumps({"_id": f"id{i:02d}", "v": v,
+                                "name": f"n{i % 4}"}) + "\n")
+    (root / "main" / "empty.jsonl").write_text("")
+    return str(root)
+
+
+@pytest.fixture(scope="module")
+def csv_root(tmp_path_factory):
+    root = tmp_path_factory.mktemp("direct_csv")
+    (root / "main").mkdir()
+    lines = ["k,name,score,flag,day"]
+    for i in range(40):
+        name = "" if i % 6 == 0 else f"n{i % 5}"
+        lines.append(f"{i},{name},{i * 0.25},{'true' if i % 2 else 'false'},"
+                     f"2024-02-{1 + i % 28:02d}")
+    (root / "main" / "dim.csv").write_text("\n".join(lines) + "\n")
+    return str(root)
+
+
+def _assert_parity(f, ordered=False):
+    fd, fs, d, s = _both(f)
+    assert fd.last_exec_path == "direct"
+    assert fs.last_exec_path == "datasource"
+    assert d.schema == s.schema
+    dr, sr = list(map(tuple, d.collect())), list(map(tuple, s.collect()))
+    if not ordered:
+        dr, sr = sorted(dr, key=repr), sorted(sr, key=repr)
+    assert dr == sr
+    return dr
+
+
+class TestRowPathParity:
+    """Local JSONL/CSV collections (no ``arrow_scan``) take the direct
+    row path: the reader's own ``_result_docs`` + flatten + Arrow
+    batching on the driver, identical rows and schema to the forced
+    DataSource scan."""
+
+    def test_jsonl_filter_projection(self, spark, jsonl_root):
+        from duckdb_mongo_spark.backends import JsonlBackend
+
+        be = JsonlBackend(jsonl_root)
+        f = (_mf(spark, be, "orders").filter(C("price") > 30.0)
+             .select("_id", "price", "status"))
+        assert len(_assert_parity(f)) == 39
+
+    def test_jsonl_in_and_null_filters(self, spark, jsonl_root):
+        from duckdb_mongo_spark.backends import JsonlBackend
+
+        be = JsonlBackend(jsonl_root)
+        f = (_mf(spark, be, "orders").filter(C("status").isin("a", "c"))
+             .select("_id", "status"))
+        assert {r[1] for r in _assert_parity(f)} == {"a", "c"}
+        f = _mf(spark, be, "orders").filter(C("status").is_null()).select("_id")
+        assert len(_assert_parity(f)) > 0
+
+    def test_jsonl_dotted_paths(self, spark, jsonl_root):
+        from duckdb_mongo_spark.backends import JsonlBackend
+
+        be = JsonlBackend(jsonl_root)
+        f = (_mf(spark, be, "orders").filter(C("address_city") == "c1")
+             .select("_id", "address_city", "address_geo_lat"))
+        rows = _assert_parity(f)
+        assert rows and all(r[1] == "c1" and r[2] is not None for r in rows)
+        # absent parent documents read as NULL on both paths
+        f = _mf(spark, be, "orders").select("_id", "address_geo_lat")
+        assert sum(r[1] is None for r in _assert_parity(f)) == 12
+
+    def test_jsonl_extended_json_values(self, spark, jsonl_root):
+        import datetime as dt
+        from decimal import Decimal
+
+        from duckdb_mongo_spark.backends import JsonlBackend
+
+        be = JsonlBackend(jsonl_root)
+        f = _mf(spark, be, "orders").select("_id", "when", "amount")
+        rows = _assert_parity(f)
+        by_id = {r[0]: r for r in rows}
+        first = by_id[f"{0:024x}"]
+        assert first[1] == dt.datetime(2024, 1, 1, 0, 30)
+        assert Decimal(str(by_id[f"{12:024x}"][2])) == Decimal(12)
+
+    def test_jsonl_schema_sentinel(self, spark, jsonl_root):
+        from duckdb_mongo_spark.backends import JsonlBackend
+
+        be = JsonlBackend(jsonl_root)
+        f = _mf(spark, be, "declared").select("_id", "v", "name")
+        assert f.schema.source == "__schema"
+        rows = _assert_parity(f)
+        ids = {r[0] for r in rows}
+        assert "__schema" not in ids and len(ids) == 30
+
+    def test_jsonl_empty_collection(self, spark, jsonl_root):
+        from duckdb_mongo_spark.backends import JsonlBackend
+
+        be = JsonlBackend(jsonl_root)
+        sch = resolve_schema(be, "main", "empty",
+                             columns={"_id": "VARCHAR", "v": "BIGINT"})
+        f = MongoFrame(spark=spark, backend=be, db="main", coll="empty",
+                       schema=sch)
+        assert _assert_parity(f) == []
+
+    def test_jsonl_unordered_limit_same_head(self, spark, jsonl_root):
+        from duckdb_mongo_spark.backends import JsonlBackend
+
+        be = JsonlBackend(jsonl_root)
+        f = (_mf(spark, be, "orders").filter(C("price") > 10.0).limit(5)
+             .select("_id", "price"))
+        rows = _assert_parity(f, ordered=True)
+        assert [r[1] for r in rows] == [10.5, 12.0, 13.5, 15.0, 16.5]
+
+    def test_jsonl_row_cap_routes_to_datasource(self, spark, jsonl_root,
+                                                monkeypatch):
+        from duckdb_mongo_spark.backends import JsonlBackend
+
+        monkeypatch.setattr(frame_mod, "DIRECT_SCAN_MAX_ROWS", 59)
+        be = JsonlBackend(jsonl_root)
+        f = _mf(spark, be, "orders").select("_id")
+        assert f.df().count() == 60
+        assert f.last_exec_path == "datasource"
+        monkeypatch.setattr(frame_mod, "DIRECT_SCAN_MAX_ROWS", 60)
+        f = _mf(spark, be, "orders").select("_id")
+        f.df()
+        assert f.last_exec_path == "direct"
+
+    def test_jsonl_cells_cap_routes_to_datasource(self, spark, jsonl_root,
+                                                  monkeypatch):
+        from duckdb_mongo_spark.backends import JsonlBackend
+
+        # the row path gets 1/ROW_SCAN_CELLS_DIVISOR of the cell budget
+        be = JsonlBackend(jsonl_root)
+        share = frame_mod.ROW_SCAN_CELLS_DIVISOR
+        monkeypatch.setattr(frame_mod, "DIRECT_SCAN_MAX_CELLS", 60 * 2 * share - 1)
+        f = _mf(spark, be, "orders").select("_id", "price")
+        f.df()
+        assert f.last_exec_path == "datasource"
+        monkeypatch.setattr(frame_mod, "DIRECT_SCAN_MAX_CELLS", 60 * 2 * share)
+        f = _mf(spark, be, "orders").select("_id", "price")
+        f.df()
+        assert f.last_exec_path == "direct"
+
+    def test_jsonl_direct_false_honored(self, spark, jsonl_root):
+        from duckdb_mongo_spark.backends import JsonlBackend
+
+        be = JsonlBackend(jsonl_root)
+        f = replace(_mf(spark, be, "orders").select("_id"), direct=False)
+        f.df()
+        assert f.last_exec_path == "datasource"
+
+    def test_jsonl_spark_side_agg_declines(self, spark, jsonl_root):
+        # same decline as the arrow branch: a Spark-side groupBy feeds
+        # on the partitioned scan
+        from duckdb_mongo_spark.backends import JsonlBackend
+
+        be = JsonlBackend(jsonl_root)
+        f = _mf(spark, be, "orders").group_by("status").agg(
+            ("count_star", None, "n"))
+        f.df()
+        assert f.last_exec_path == "datasource"
+
+    def test_dropmalformed_parity(self, spark, jsonl_root):
+        from duckdb_mongo_spark.backends import JsonlBackend
+
+        be = JsonlBackend(jsonl_root)
+        f = replace(_mf(spark, be, "declared").select("_id", "v"),
+                    schema_mode="DROPMALFORMED")
+        rows = _assert_parity(f)
+        assert len(rows) == 29 and "id07" not in {r[0] for r in rows}
+
+    def test_failfast_keeps_action_time_error(self, spark, jsonl_root):
+        from pyspark.errors import PythonException
+
+        from duckdb_mongo_spark.backends import JsonlBackend
+
+        be = JsonlBackend(jsonl_root)
+        for direct in (None, True):
+            f = replace(_mf(spark, be, "declared").select("_id", "v"),
+                        schema_mode="FAILFAST", direct=direct)
+            df = f.df()  # no error at build time
+            assert f.last_exec_path == "datasource"
+            with pytest.raises(PythonException,
+                               match=r"SchemaEnforcementError.*'id07'"):
+                df.collect()
+
+    def test_csv_filter_projection_and_nulls(self, spark, csv_root):
+        from duckdb_mongo_spark.backends import CsvBackend
+
+        be = CsvBackend(csv_root)
+        f = (_mf(spark, be, "dim").filter(C("score") > 2.0)
+             .select("k", "name", "score", "flag", "day"))
+        assert len(_assert_parity(f)) == 31
+        f = _mf(spark, be, "dim").filter(C("name").is_null()).select("k")
+        assert sorted(r[0] for r in _assert_parity(f)) == list(range(0, 40, 6))
+        f = (_mf(spark, be, "dim").filter(C("name").isin("n1", "n3"))
+             .select("k", "name"))
+        assert {r[1] for r in _assert_parity(f)} == {"n1", "n3"}
+
+    def test_csv_unordered_limit_same_head(self, spark, csv_root):
+        from duckdb_mongo_spark.backends import CsvBackend
+
+        be = CsvBackend(csv_root)
+        f = _mf(spark, be, "dim").limit(4).select("k")
+        assert _assert_parity(f, ordered=True) == [(0,), (1,), (2,), (3,)]

@@ -470,6 +470,27 @@ class TestSimilarity:
         assert assigned.count() == 4
         assert len(centroids) == 2
 
+    def test_ivf_fit_independent_of_input_partitions(self, spark):
+        """k-means|| init samples per partition: the fit must not follow
+        how the corpus happens to be partitioned."""
+        import random
+
+        rnd = random.Random(5)
+        rows = [(f"v{i:03d}", [rnd.gauss(i % 3, 0.4), rnd.gauss(0, 1.0),
+                               rnd.gauss(-(i % 3), 0.7)]) for i in range(3000)]
+        base = spark.createDataFrame(rows, ["vec_id", "embedding"])
+        out = []
+        for n_parts in (1, 7):
+            corpus = base.repartition(n_parts)
+            assert corpus.rdd.getNumPartitions() == n_parts
+            assigned, centroids = similarity.ivf_index(
+                corpus, n_centroids=5, seed=3)
+            cells = sorted((r["c_id"], r["centroid_id"])
+                           for r in assigned.collect())
+            out.append((centroids, cells))
+        assert out[0] == out[1]
+        assert len(out[0][0]) == 5
+
 
 class TestTextAnalysis:
     def test_token_count(self, spark):
