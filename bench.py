@@ -13,10 +13,25 @@ including scan.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
 import time
+
+
+@contextlib.contextmanager
+def _cold_text_stats():
+    """Serve no BM25 statistics sidecar inside the block, so a routed
+    ``$search`` runs its live per-query statistics pass."""
+    from duckdb_mongo_spark.ops import text_index
+
+    real = text_index.cached_stats
+    text_index.cached_stats = lambda *a, **k: None
+    try:
+        yield
+    finally:
+        text_index.cached_stats = real
 
 
 def _stage_layout(sf_dir: str, n_groups: int = 32) -> str:
@@ -132,14 +147,11 @@ def _install_lean_line_items(qs: dict, oracles: dict) -> None:
         ]
         # the COLD line must measure the per-query statistics recompute
         # even after the cached line's warmup committed a sidecar for
-        # the same collection — kill-switch the lookup for this build
+        # the same collection — switch the lookup off for this build
         # (pass 1 executes eagerly inside df(), so the guard covers it)
-        os.environ["SPARK_GRAFT_TEXT_STATS_DISABLE"] = "1"
-        try:
+        with _cold_text_stats():
             return mongo_scan(spark, be, "main", "documents",
                               pipeline=pipe).df()
-        finally:
-            os.environ.pop("SPARK_GRAFT_TEXT_STATS_DISABLE", None)
 
     qs["search_text_topk"] = _search_text
 
@@ -827,12 +839,9 @@ def _search_pass1_decomp(spark, d: str, sf10: dict) -> dict:
                              "count": {"type": "total"}}}]
 
     def _pass1():
-        os.environ["SPARK_GRAFT_TEXT_STATS_DISABLE"] = "1"
-        try:
+        with _cold_text_stats():
             return mongo_scan(spark, be, "main", "documents",
                               pipeline=pipe).df()
-        finally:
-            os.environ.pop("SPARK_GRAFT_TEXT_STATS_DISABLE", None)
 
     _consume(_pass1())  # warm
     ss = []

@@ -273,8 +273,17 @@ class AttachedCatalog:
 
     def register_views(self, db: str | None = None, prefix: str | None = None):
         """Register every collection as a Spark temp view named
-        ``<alias>_<coll>`` so plain spark.sql works over the source
-        (Catalyst filter pushdown reaches the reader via pushFilters)."""
+        ``<alias>_<coll>`` so plain spark.sql works over the source.
+
+        Each view is the plan ``table(coll).df()`` picks at registration.
+        A broadcast-class local collection (the direct path) becomes a
+        ``LocalRelation`` of rows read now: no SQL filter reaches a
+        reader. A local parquet collection past the caps reads through
+        Spark's own parquet scan, which pushes filters itself. A Python
+        DataSource view (remote and in-memory backends, JSONL/CSV past
+        the caps) gets Catalyst filter pushdown through ``pushFilters``.
+        Views are snapshots: a view does not see writes made after it
+        was registered, so re-run ``register_views`` after a write."""
         db = db or self._default_db()
         prefix = prefix if prefix is not None else self.alias
         created = []

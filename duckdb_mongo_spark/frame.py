@@ -1175,12 +1175,12 @@ class MongoFrame:
         - no stable ``_id`` to round-trip candidates through the scan
           (Atlas requires ``_id`` for the same reason);
         - probing would touch every cell, or the candidate id set
-          outgrows ``SPARK_GRAFT_ANN_FETCH_MAX``: pruning buys nothing.
+          outgrows ``vector_index.FETCH_MAX``: pruning buys nothing.
 
         Otherwise probes the durable IVF(-PQ) sidecar
         (``ops/vector_index.py``): the probed cells' ids — after a
         PQ-ADC preselect down to ``numCandidates`` when the code column
-        exists and the probe overshoots by SPARK_GRAFT_ANN_ADC_FACTORx —
+        exists and the probe overshoots by ``vector_index.ADC_FACTOR``x —
         are pushed back into the BACKEND scan as an ``_id $in`` filter
         (row-group-pruned locally, the _id index on a real server). The
         pre-filter rides the same scan with FULL MQL semantics (any
@@ -1221,7 +1221,6 @@ class MongoFrame:
                 return None
         if nc >= idx.corpus_n:
             return None
-        fetch_max = VI._fetch_max()
         target = nc
         reprobes = 0
         while True:
@@ -1229,16 +1228,16 @@ class MongoFrame:
             if cells is None:
                 return None  # probe covers the corpus — exact scan wins
             use_adc = (vfilter is None and idx.has_codes
-                       and probed >= VI._adc_factor() * nc)
+                       and probed >= VI.ADC_FACTOR * nc)
             if use_adc:
                 pkdf = VI.adc_preselect(idx, cells, qv, similarity, nc)
                 id_bound = nc + idx.zero_n
             else:
                 pkdf = VI.candidate_pks(idx, cells)
                 id_bound = int(probed)
-            if id_bound > fetch_max:
+            if id_bound > VI.FETCH_MAX:
                 return None  # id-list push would cost more than it prunes
-            ids = [r[0] for r in pkdf.collect()]  # bounded: <= fetch_max
+            ids = [r[0] for r in pkdf.collect()]  # bounded: <= FETCH_MAX
             if not ids:
                 return None
             mfilter = {"_id": {"$in": ids}}

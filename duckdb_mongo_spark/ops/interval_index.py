@@ -8,13 +8,12 @@ artifact, exactly like the BM25 corpus-statistics sidecar
 (``ops/text_index.py``). This module materializes that envelope table
 once: a versioned on-disk parquet sidecar keyed by the SOURCE's file
 fingerprint plus the envelope spec (predicate, keys, time column, bin
-width, extra aggregates), with the same commit protocol as the vector
-and text sidecars (immutable ``v-*`` dirs, atomic ``CURRENT`` pointer,
-superseded-version GC). A query passes the returned handle as the
-``intervals=`` side of ``interval_join_points`` /
-``interval_overlap_join`` and pays only the query-time join — the
-envelope aggregation (and the raw-events scan feeding it) disappears
-from the per-query plan.
+width, extra aggregates), committed, loaded and reclaimed by
+``ops/sidecar.py`` like the vector and text sidecars. A query passes
+the returned handle as the ``intervals=`` side of
+``interval_join_points`` / ``interval_overlap_join`` and pays only the
+query-time join — the envelope aggregation (and the raw-events scan
+feeding it) disappears from the per-query plan.
 
 Invalidation is by construction: the sidecar key includes the sorted
 (path, size, mtime) fingerprint of ``source.inputFiles()``, so a
@@ -37,8 +36,8 @@ FileScan's HashPartitioning satisfies the join's distribution, and
 only the point side shuffles — measured 2 Exchanges → 1 and ~12% off
 the sf10 query wall. The registration lives as long as its version dir:
 a failed bucketed write drops its table before the plain-layout
-fallback, and the superseded-version GC drops the tables of the dirs it
-deletes. Under a Hive metastore (``enableHiveSupport``) the
+fallback, and the store's GC and drop drop the tables of the dirs they
+delete. Under a Hive metastore (``enableHiveSupport``) the
 registration is not session-scoped: it persists in the metastore until
 one of those drops it, and a later session reuses it by name. Rows are
 sorted by (bin, keys) within each bucket file, so a time-bounded query
@@ -62,26 +61,17 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import tempfile
 import uuid
 from dataclasses import dataclass, field
 from urllib.parse import unquote, urlparse
 
-from pyspark.sql import Column, DataFrame
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_mongo_spark.ops.sidecar import SidecarStore
+
 _META_VERSION = 2
-
-_CACHE: dict = {}
-build_count = 0  # test introspection: sidecar builds
-load_count = 0   # ... durable loads from disk
-hit_count = 0    # ... query-time handles served from cache/disk
-
-
-def _index_root() -> str:
-    return os.environ.get(
-        "SPARK_GRAFT_INTERVAL_INDEX_DIR",
-        os.path.join(tempfile.gettempdir(), "spark_graft_interval_index"))
 
 
 def _source_fingerprint(source: DataFrame) -> str | None:
@@ -120,11 +110,6 @@ def _spec_key(t_col, on, bin_width, predicate, aggs, lo_col, hi_col,
     }, sort_keys=True)
 
 
-def _sidecar_dir(key: str) -> str:
-    return os.path.join(
-        _index_root(), hashlib.sha1(key.encode()).hexdigest()[:24])
-
-
 def _table_name(data_dir: str) -> str:
     """Catalog name of the bucketed registration of one version's
     ``data`` dir."""
@@ -132,10 +117,13 @@ def _table_name(data_dir: str) -> str:
             + hashlib.sha1(data_dir.encode()).hexdigest()[:16])
 
 
-def _drop_tables(spark, version_dirs) -> None:
+def _drop_tables(version_dirs) -> None:
     """Drop the catalog registrations of deleted version dirs (external
-    tables: dropping never touches data). Best effort, like the GC that
-    calls it."""
+    tables: dropping never touches data). Best effort, like the GC and
+    drop that call it."""
+    if SparkContext._active_spark_context is None:
+        return  # no running Spark: no catalog to clean
+    spark = SparkSession.builder.getOrCreate()
     for vdir in version_dirs:
         try:
             spark.sql(f"DROP TABLE IF EXISTS "
@@ -204,57 +192,37 @@ class IntervalIndex:
         return d
 
 
+_STORE = SidecarStore("SPARK_GRAFT_INTERVAL_INDEX_DIR",
+                      "spark_graft_interval_index", _META_VERSION,
+                      on_delete=_drop_tables)
+_CACHE = _STORE.cache
+__getattr__ = _STORE.counter  # build_count, load_count, hit_count
+
+
 def clear_interval_index_cache() -> int:
     """Drop every in-memory handle (wired into ``catalog.clear_cache()``
     — the reference's all-or-nothing metadata invalidation). Durable
     sidecars stay on disk: the next build call reloads by
     fingerprint without re-aggregating."""
-    n = len(_CACHE)
-    _CACHE.clear()
-    return n
+    return _STORE.clear()
 
 
 def drop_interval_index_sidecars() -> int:
-    """Delete every durable sidecar under the index root (and the
-    in-memory handles). Returns the number of sidecar dirs removed."""
-    import shutil
-
-    root = _index_root()
-    n = 0
-    if os.path.isdir(root):
-        for name in os.listdir(root):
-            p = os.path.join(root, name)
-            if os.path.isdir(p):
-                shutil.rmtree(p, ignore_errors=True)
-                n += 1
-    clear_interval_index_cache()
-    return n
+    """Delete every durable sidecar under the index root, their catalog
+    registrations and the in-memory handles. Returns the number of
+    sidecar dirs removed."""
+    return _STORE.drop()
 
 
-def _load_sidecar(key: str, sdir: str) -> IntervalIndex | None:
-    from duckdb_mongo_spark.ops.vector_index import _current_version_dir
-
-    global load_count
-    vdir = _current_version_dir(sdir)
-    if vdir is None:
+def _load_sidecar(key: str, vdir: str, meta: dict) -> IntervalIndex | None:
+    if meta.get("spec") != key:
         return None
-    try:
-        with open(os.path.join(vdir, "meta.json")) as f:
-            meta = json.load(f)
-        if meta.get("version") != _META_VERSION or meta.get("spec") != key:
-            return None
-        idx = IntervalIndex(
-            on=list(meta["on"]), lo_col=meta["lo_col"],
-            hi_col=meta["hi_col"], bin_col=meta["bin_col"],
-            bin_width=float(meta["bin_width"]),
-            n_intervals=int(meta["n_intervals"]),
-            data_dir=os.path.join(vdir, "data"), sidecar=vdir, spec=key,
-            bucket=meta.get("bucket"))
-    except Exception:
-        return None
-    _CACHE[key] = idx
-    load_count += 1
-    return idx
+    return IntervalIndex(
+        on=list(meta["on"]), lo_col=meta["lo_col"], hi_col=meta["hi_col"],
+        bin_col=meta["bin_col"], bin_width=float(meta["bin_width"]),
+        n_intervals=int(meta["n_intervals"]),
+        data_dir=os.path.join(vdir, "data"), sidecar=vdir, spec=key,
+        bucket=meta.get("bucket"))
 
 
 def _full_key(source, t_col, on, bin_width, predicate, aggs, lo_col,
@@ -284,15 +252,10 @@ def cached_interval_envelope_index(
     sidecar matching the CURRENT source fingerprint. Never builds —
     building is an explicit index operation
     (``build_interval_envelope_index``)."""
-    global hit_count
     key, durable = _full_key(source, t_col, on, bin_width, predicate,
                              aggs, lo_col, hi_col, bin_col)
-    idx = _CACHE.get(key)
-    if idx is None and durable:
-        idx = _load_sidecar(key, _sidecar_dir(key))
-    if idx is not None:
-        hit_count += 1
-    return idx
+    return _STORE.lookup(key, durable,
+                         lambda vdir, meta: _load_sidecar(key, vdir, meta))
 
 
 def build_interval_envelope_index(
@@ -323,13 +286,7 @@ def build_interval_envelope_index(
     and emitted by the join like any interval column.
     """
     from duckdb_mongo_spark.ops.joins import time_bin
-    from duckdb_mongo_spark.ops.vector_index import (
-        _commit_version,
-        _current_version_dir,
-        _gc_stale_versions,
-    )
 
-    global build_count
     existing = cached_interval_envelope_index(
         source, t_col, on, bin_width, predicate, aggs, lo_col, hi_col,
         bin_col)
@@ -345,11 +302,8 @@ def build_interval_envelope_index(
     env = (src.groupBy(*on, time_bin(src, t_col, bin_width).alias(bin_col))
            .agg(*agg_cols))
 
-    sdir = _sidecar_dir(key) if durable else os.path.join(
-        _index_root(), f"mem-{uuid.uuid4().hex[:16]}")
-    vname = f"v-{uuid.uuid4().hex[:16]}"
-    vdir = os.path.join(sdir, vname)
-    os.makedirs(vdir, exist_ok=True)
+    vdir = _STORE.new_version(_STORE.dir(key) if durable else os.path.join(
+        _STORE.root(), f"mem-{uuid.uuid4().hex[:16]}"))
     data_dir = os.path.join(vdir, "data")
     spark = source.sparkSession
     # r15 (r14 verdict #1): BUCKETED write on (bin, keys) — the join's
@@ -389,28 +343,16 @@ def build_interval_envelope_index(
 
         # a failed bucketed write may already have registered its table:
         # drop it with the files, or it dangles over the plain layout
-        _drop_tables(spark, [vdir])
+        _drop_tables([vdir])
         shutil.rmtree(data_dir, ignore_errors=True)
         (env.repartitionByRange(F.col(bin_col), *[F.col(k) for k in on])
          .sortWithinPartitions(bin_col, *on)
          .write.mode("overwrite").parquet(data_dir))
     # metadata-only count over the written footers
     n = spark.read.parquet(data_dir).count()
-    meta = {"version": _META_VERSION, "spec": key, "on": on,
-            "lo_col": lo_col, "hi_col": hi_col, "bin_col": bin_col,
-            "bin_width": float(bin_width), "n_intervals": n}
+    meta = {"spec": key, "on": on, "lo_col": lo_col, "hi_col": hi_col,
+            "bin_col": bin_col, "bin_width": float(bin_width),
+            "n_intervals": n}
     if bucket_meta is not None:
         meta["bucket"] = bucket_meta
-    with open(os.path.join(vdir, "meta.json"), "w") as f:
-        json.dump(meta, f)  # last file within the version dir
-    prev = _current_version_dir(sdir)
-    _commit_version(sdir, vname)
-    _drop_tables(spark, _gc_stale_versions(sdir, keep={vname} | (
-        {os.path.basename(prev)} if prev else set())))
-    idx = IntervalIndex(
-        on=on, lo_col=lo_col, hi_col=hi_col, bin_col=bin_col,
-        bin_width=float(bin_width), n_intervals=n, data_dir=data_dir,
-        sidecar=vdir, spec=key, bucket=bucket_meta)
-    _CACHE[key] = idx
-    build_count += 1
-    return idx
+    return _STORE.commit(key, vdir, meta, _load_sidecar(key, vdir, meta))

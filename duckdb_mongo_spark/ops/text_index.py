@@ -11,12 +11,11 @@ per query with a full engine-scan aggregate pass
 federation tax that SCALE.md's r10 decomposition measured at ~40% of the
 sf10 ``search_text_topk`` wall time. This module is the local stand-in
 for that server-side index state: a versioned on-disk sidecar per
-(collection fingerprint, path, analyzer), sharing the
-``ops/vector_index.py`` commit protocol (immutable ``v-*`` version dirs,
-atomic ``CURRENT`` pointer, superseded-version GC), so a query reads
-N/total_len from a tiny ``meta.json`` and the per-term document
-frequencies from a term-range-sorted parquet term dictionary with
-predicate pushdown — no corpus pass at all.
+(collection fingerprint, path, analyzer), committed, loaded and
+reclaimed by ``ops/sidecar.py`` like the vector and interval sidecars,
+so a query reads N/total_len from a tiny ``meta.json`` and the per-term
+document frequencies from a term-range-sorted parquet term dictionary
+with predicate pushdown — no corpus pass at all.
 
 Invalidation is by construction: the sidecar key includes the backend's
 collection fingerprint (file paths + sizes + mtimes for parquet), so a
@@ -37,14 +36,12 @@ size. No resident driver memory scales with the corpus.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
-import tempfile
-import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import functions as F
+
+from duckdb_mongo_spark.ops.sidecar import SidecarStore, backend_key
 
 # the engine-contract tokenizer (mql/search._analyze) IS lucene.standard
 CONTRACT_ANALYZER_KEY = "lucene.standard"
@@ -56,35 +53,10 @@ _META_VERSION = 1
 # silently hold an unbounded dict on the driver
 _MEM_TERMS_CAP = 1_000_000
 
-_CACHE: dict = {}
-build_count = 0  # test introspection: sidecar builds
-load_count = 0   # ... durable loads from disk
-hit_count = 0    # ... query-time stats served from a handle
-
-
-def _stats_root() -> str:
-    return os.environ.get(
-        "SPARK_GRAFT_TEXT_STATS_DIR",
-        os.path.join(tempfile.gettempdir(), "spark_graft_text_stats"))
-
-
-def _cache_key(backend, db, coll, mongo_path, analyzer_key):
-    fp = None
-    fingerprint = getattr(backend, "fingerprint", None)
-    if callable(fingerprint):
-        try:
-            fp = fingerprint(db, coll)
-        except Exception:
-            fp = None
-    ident = fp if fp is not None else id(backend)
-    return (type(backend).__name__, ident, db, coll, mongo_path,
-            analyzer_key)
-
-
-def _sidecar_dir(key) -> str:
-    return os.path.join(
-        _stats_root(),
-        hashlib.sha1(repr(key).encode()).hexdigest()[:24])
+_STORE = SidecarStore("SPARK_GRAFT_TEXT_STATS_DIR", "spark_graft_text_stats",
+                      _META_VERSION)
+_CACHE = _STORE.cache
+__getattr__ = _STORE.counter  # build_count, load_count, hit_count
 
 
 @dataclass
@@ -127,52 +99,21 @@ def clear_text_stats_cache() -> int:
     — the reference's all-or-nothing metadata invalidation,
     src/mongo_clear_cache.cpp). Durable sidecars stay on disk: the next
     query reloads by fingerprint without rebuilding."""
-    n = len(_CACHE)
-    _CACHE.clear()
-    return n
+    return _STORE.clear()
 
 
 def drop_text_stats_sidecars() -> int:
     """Delete every durable sidecar under the stats root (and the
     in-memory handles). Returns the number of sidecar dirs removed."""
-    import shutil
-
-    root = _stats_root()
-    n = 0
-    if os.path.isdir(root):
-        for name in os.listdir(root):
-            p = os.path.join(root, name)
-            if os.path.isdir(p):
-                shutil.rmtree(p, ignore_errors=True)
-                n += 1
-    clear_text_stats_cache()
-    return n
+    return _STORE.drop()
 
 
-def _load_sidecar(key, sdir) -> TextStatsIndex | None:
-    from duckdb_mongo_spark.ops.vector_index import _current_version_dir
-
-    global load_count
-    vdir = _current_version_dir(sdir)
-    if vdir is None:
-        return None
-    try:
-        with open(os.path.join(vdir, "meta.json")) as f:
-            meta = json.load(f)
-        if meta.get("version") != _META_VERSION:
-            return None
-        idx = TextStatsIndex(
-            n_docs=int(meta["n_docs"]), total_len=int(meta["total_len"]),
-            multibyte=bool(meta["multibyte"]),
-            analyzer_key=meta["analyzer_key"],
-            mongo_path=meta["mongo_path"],
-            terms_dir=os.path.join(vdir, "terms"), sidecar=vdir,
-        )
-    except Exception:
-        return None
-    _CACHE[key] = idx
-    load_count += 1
-    return idx
+def _load_sidecar(vdir: str, meta: dict) -> TextStatsIndex:
+    return TextStatsIndex(
+        n_docs=int(meta["n_docs"]), total_len=int(meta["total_len"]),
+        multibyte=bool(meta["multibyte"]),
+        analyzer_key=meta["analyzer_key"], mongo_path=meta["mongo_path"],
+        terms_dir=os.path.join(vdir, "terms"), sidecar=vdir)
 
 
 def cached_stats(backend, db, coll, mongo_path,
@@ -181,16 +122,8 @@ def cached_stats(backend, db, coll, mongo_path,
     sidecar for the CURRENT collection fingerprint. Never builds —
     building is an explicit index operation (``build_text_stats_index``),
     so the cold query path is unchanged."""
-    global hit_count
-    if os.environ.get("SPARK_GRAFT_TEXT_STATS_DISABLE"):
-        return None  # benchmarking kill switch: force the live pass
-    key = _cache_key(backend, db, coll, mongo_path, analyzer_key)
-    idx = _CACHE.get(key)
-    if idx is None and key[1] is not None and not isinstance(key[1], int):
-        idx = _load_sidecar(key, _sidecar_dir(key))
-    if idx is not None:
-        hit_count += 1
-    return idx
+    key, durable = backend_key(backend, db, coll, mongo_path, analyzer_key)
+    return _STORE.lookup(key, durable, _load_sidecar)
 
 
 def _tokens_df(bdf, fs, analyze_fn):
@@ -242,17 +175,10 @@ def build_path_stats(backend, db, coll, bdf, fs, analyze_fn,
     path under one analyzer. ``bdf`` must be the UNFILTERED base scan —
     N and the frequencies describe the whole corpus, exactly what the
     live pass aggregates."""
-    from duckdb_mongo_spark.ops.vector_index import (
-        _commit_version,
-        _current_version_dir,
-        _gc_stale_versions,
-    )
-
     from py4j.protocol import Py4JJavaError
     from pyspark.sql import Observation
 
-    global build_count
-    key = _cache_key(backend, db, coll, fs.mongo_path, analyzer_key)
+    key, durable = backend_key(backend, db, coll, fs.mongo_path, analyzer_key)
     # the summary (N, total length, multibyte flag) is observed inside
     # the term-dictionary job, so the tokenizer runs once per build
     stats = [F.count(F.lit(1)).alias("n"),
@@ -274,7 +200,6 @@ def build_path_stats(backend, db, coll, bdf, fs, analyze_fn,
             row = _tokens_df(bdf, fs, analyze_fn).agg(*stats).collect()[0].asDict()
         return (int(row["n"] or 0), int(row["total"] or 0), bool(row["mb"]))
 
-    durable = key[1] is not None and not isinstance(key[1], int)
     if not durable:
         rows = terms.limit(_MEM_TERMS_CAP + 1).collect()
         if len(rows) > _MEM_TERMS_CAP:
@@ -283,18 +208,12 @@ def build_path_stats(backend, db, coll, bdf, fs, analyze_fn,
                 f"exceeds {_MEM_TERMS_CAP} terms and the backend has no "
                 "durable fingerprint for an on-disk sidecar")
         n_docs, total_len, multibyte = summary()
-        idx = TextStatsIndex(
+        return _STORE.put(key, TextStatsIndex(
             n_docs=n_docs, total_len=total_len, multibyte=multibyte,
             analyzer_key=analyzer_key, mongo_path=fs.mongo_path,
-            mem_dfs={r["term"]: int(r["df"]) for r in rows})
-        _CACHE[key] = idx
-        build_count += 1
-        return idx
+            mem_dfs={r["term"]: int(r["df"]) for r in rows}))
 
-    sdir = _sidecar_dir(key)
-    vname = f"v-{uuid.uuid4().hex[:16]}"
-    vdir = os.path.join(sdir, vname)
-    os.makedirs(vdir, exist_ok=True)
+    vdir = _STORE.new_version(_STORE.dir(key))
     # one file per ~250k docs of corpus (vocabulary grows sublinearly);
     # range-partitioned + sorted so every file/row-group covers one term
     # range and query-time isin() pushdown prunes to a handful of pages.
@@ -306,22 +225,10 @@ def build_path_stats(backend, db, coll, bdf, fs, analyze_fn,
      .sortWithinPartitions("term")
      .write.mode("overwrite").parquet(os.path.join(vdir, "terms")))
     n_docs, total_len, multibyte = summary()
-    meta = {"version": _META_VERSION, "n_docs": n_docs,
-            "total_len": total_len, "multibyte": multibyte,
-            "analyzer_key": analyzer_key, "mongo_path": fs.mongo_path}
-    with open(os.path.join(vdir, "meta.json"), "w") as f:
-        json.dump(meta, f)  # last file within the version dir
-    prev = _current_version_dir(sdir)
-    _commit_version(sdir, vname)
-    _gc_stale_versions(sdir, keep={vname} | (
-        {os.path.basename(prev)} if prev else set()))
-    idx = TextStatsIndex(
-        n_docs=n_docs, total_len=total_len, multibyte=multibyte,
-        analyzer_key=analyzer_key, mongo_path=fs.mongo_path,
-        terms_dir=os.path.join(vdir, "terms"), sidecar=vdir)
-    _CACHE[key] = idx
-    build_count += 1
-    return idx
+    meta = {"n_docs": n_docs, "total_len": total_len,
+            "multibyte": multibyte, "analyzer_key": analyzer_key,
+            "mongo_path": fs.mongo_path}
+    return _STORE.commit(key, vdir, meta, _load_sidecar(vdir, meta))
 
 
 def build_text_stats_index(spark, backend, db: str, coll: str,

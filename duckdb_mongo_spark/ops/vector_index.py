@@ -28,7 +28,7 @@ module supplies the index the server would have had:
   cos-family query, so they compete in the exact re-rank like any
   candidate.
 - **PQ codes sidecar column** (``pq_train``/``pq_encode`` reuse): for
-  high-dimension vectors (>= SPARK_GRAFT_PQ_MIN_DIM, default 128) the
+  high-dimension vectors (>= ``PQ_MIN_DIM``, 128) the
   postings carry an m-byte PQ code. Query-time ADC preselect scans
   only the probed cells of the narrow sidecar and keeps the top
   ``numCandidates`` ids; the (<= 10k by Atlas contract) winners are
@@ -51,64 +51,42 @@ count reaches numCandidates — Atlas filters during index traversal, so
 its recall does not degrade with filter selectivity; neither does ours.
 
 Durability contract (r9, versioned): each build writes a fresh
-``v-<token>/`` directory (postings, arrays.npz, then meta.json LAST
-within the version) and commits it by atomically renaming a pointer
-file onto ``CURRENT`` (``os.replace`` — POSIX rename atomicity).
-Readers resolve ``CURRENT`` once at load and keep file handles into
-that immutable version, so CONCURRENT builders of the same
-fingerprint race safely last-wins: a reader never observes a torn or
-half-overwritten index, only the previously committed version. A
-build killed mid-write leaves an uncommitted ``v-*`` dir that no
-reader resolves. Superseded versions and orphaned fingerprints are
+immutable version dir (postings, arrays.npz) and commits it through
+``ops/sidecar.py``, which owns the versioned commit, load and GC
+protocol shared with the text and interval sidecars. Readers resolve
+the committed version once at load and scan that immutable dir, so
+concurrent builders of one fingerprint race safely last-wins and a
+reader never observes a torn index. Orphaned fingerprints are
 reclaimed by ``drop_vector_index_sidecars``.
 """
 from __future__ import annotations
 
-import hashlib
-import json
 import math
 import os
-import tempfile
-import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_META_VERSION = 3  # r9: versioned sidecar layout (CURRENT pointer commit)
+from duckdb_mongo_spark.ops.sidecar import SidecarStore, backend_key
 
+_META_VERSION = 3  # r9: versioned sidecar layout
 
-def _fit_sample() -> int:
-    return int(os.environ.get("SPARK_GRAFT_IVF_FIT_SAMPLE", "100000"))
+FIT_SAMPLE = 100_000  # KMeans and PQ codebook fit sample size
+PQ_MIN_DIM = 128      # vectors of this dimension or more carry PQ codes
+# ADC preselect runs when the probe covers this many times numCandidates
+ADC_FACTOR = 4.0
+# Largest candidate-id set the frame layer will collect and push into
+# the backend scan as an ``$in``. Beyond it the pruning value of ANN is
+# gone relative to the plan-string/driver cost of the id list, so the
+# caller degrades to the exact scan. With PQ-ADC active the id set is
+# <= numCandidates <= 10k (Atlas contract), far under this bound.
+FETCH_MAX = 200_000
 
-
-def _pq_min_dim() -> int:
-    return int(os.environ.get("SPARK_GRAFT_PQ_MIN_DIM", "128"))
-
-
-def _adc_factor() -> float:
-    return float(os.environ.get("SPARK_GRAFT_ANN_ADC_FACTOR", "4"))
-
-
-def _index_root() -> str:
-    return os.environ.get(
-        "SPARK_GRAFT_INDEX_DIR",
-        os.path.join(tempfile.gettempdir(), "spark_graft_vector_index"))
-
-
-def _fetch_max() -> int:
-    """Largest candidate-id set the frame layer will collect and push
-    into the backend scan as an ``$in``. Beyond it the pruning value of
-    ANN is gone relative to the plan-string/driver cost of the id list,
-    so the caller degrades to the exact scan (loud in the diagnostics).
-    With PQ-ADC active the id set is <= numCandidates <= 10k (Atlas
-    contract), far under this bound."""
-    return int(os.environ.get("SPARK_GRAFT_ANN_FETCH_MAX", "200000"))
-
-
-_CACHE: dict = {}
-build_count = 0  # test introspection: how many indexes were BUILT
-load_count = 0   # ... and how many were loaded from a durable sidecar
+_STORE = SidecarStore("SPARK_GRAFT_INDEX_DIR", "spark_graft_vector_index",
+                      _META_VERSION)
+_CACHE = _STORE.cache
+__getattr__ = _STORE.counter  # build_count, load_count, hit_count
 
 
 @dataclass
@@ -131,90 +109,12 @@ class CollectionVectorIndex:
         return self.codebooks is not None
 
 
-def _cache_key(backend, db, coll, mongo_path, d, family):
-    fp = None
-    fingerprint = getattr(backend, "fingerprint", None)
-    if callable(fingerprint):
-        try:
-            fp = fingerprint(db, coll)
-        except Exception:
-            fp = None
-    ident = fp if fp is not None else id(backend)
-    return (type(backend).__name__, ident, db, coll, mongo_path, d, family)
-
-
-def _sidecar_dir(key) -> str:
-    return os.path.join(
-        _index_root(),
-        hashlib.sha1(repr(key).encode()).hexdigest()[:24])
-
-
-def _current_version_dir(sdir: str) -> str | None:
-    """Resolve the committed version of a sidecar, or None. ``CURRENT``
-    names the version directory; a version without its meta.json (a
-    builder died between pointer write and... impossible by ordering,
-    but also a hand-truncated dir) reads as uncommitted."""
-    try:
-        with open(os.path.join(sdir, "CURRENT")) as f:
-            name = f.read().strip()
-    except OSError:
-        return None
-    if not name or os.sep in name or name.startswith("."):
-        return None
-    vdir = os.path.join(sdir, name)
-    return vdir if os.path.isfile(os.path.join(vdir, "meta.json")) else None
-
-
-def _commit_version(sdir: str, vname: str) -> None:
-    """Atomically publish ``vname`` as the sidecar's committed version.
-    The tmp pointer is per-version-named so two racing builders never
-    write the same tmp file; ``os.replace`` is the atomic swap — a
-    concurrent reader sees either the old pointer or the new one,
-    never a partial file."""
-    tmp = os.path.join(sdir, f".CURRENT.{vname}")
-    with open(tmp, "w") as f:
-        f.write(vname)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(sdir, "CURRENT"))
-
-
-def _gc_stale_versions(sdir: str, keep: set) -> list[str]:
-    """Best-effort reclaim of superseded ``v-*`` version dirs after a
-    commit (r9 advice: repeated rebuilds of one fingerprint leaked every
-    prior version until the all-or-nothing drop). The committed version
-    AND the one it superseded are kept — Spark parquet readers resolve a
-    version by PATH at load and scan lazily (no held file handles), so a
-    reader that loaded the just-superseded version must still find its
-    files; anything two generations stale (or a racing builder's
-    never-committed dir) is reclaimed. Leak bound: <= 2 versions per
-    fingerprint instead of unbounded. Failures are swallowed: GC is
-    hygiene, never correctness. Returns the version dirs removed."""
-    import shutil
-
-    removed = []
-    try:
-        names = os.listdir(sdir)
-    except OSError:
-        return removed
-    for name in names:
-        if name.startswith("v-") and name not in keep:
-            removed.append(os.path.join(sdir, name))
-            shutil.rmtree(removed[-1], ignore_errors=True)
-        elif name.startswith(".CURRENT.") and name[len(".CURRENT."):] not in keep:
-            # torn tmp pointer from a builder that died pre-replace
-            try:
-                os.unlink(os.path.join(sdir, name))
-            except OSError:
-                pass
-    return removed
-
-
 def cached_index(backend, db, coll, mongo_path, d, family):
     """Cache peek — lets callers skip building the base scan frame when
     the index already exists (fingerprint re-checked, so stale file
     versions miss)."""
-    return _CACHE.get(_cache_key(backend, db, coll, mongo_path, d, family))
+    key, _ = backend_key(backend, db, coll, mongo_path, d, family)
+    return _CACHE.get(key)
 
 
 def clear_vector_index_cache() -> int:
@@ -224,9 +124,7 @@ def clear_vector_index_cache() -> int:
     stay on disk (an index is data, not cache): the next query reloads
     by fingerprint without rebuilding. ``drop_vector_index_sidecars``
     deletes the disk side too."""
-    n = len(_CACHE)
-    _CACHE.clear()
-    return n
+    return _STORE.clear()
 
 
 def drop_vector_index_sidecars() -> int:
@@ -234,18 +132,7 @@ def drop_vector_index_sidecars() -> int:
     in-memory handles pointing at them). Returns the number of sidecar
     directories removed. The explicit "drop index" verb — fingerprint
     rotation already orphans stale sidecars, this reclaims them."""
-    import shutil
-
-    root = _index_root()
-    n = 0
-    if os.path.isdir(root):
-        for name in os.listdir(root):
-            p = os.path.join(root, name)
-            if os.path.isdir(p):
-                shutil.rmtree(p, ignore_errors=True)
-                n += 1
-    clear_vector_index_cache()
-    return n
+    return _STORE.drop()
 
 
 def _valid_vectors(bdf: DataFrame, vec_name: str, d: int):
@@ -261,38 +148,22 @@ def _valid_vectors(bdf: DataFrame, vec_name: str, d: int):
     )
 
 
-def _load_sidecar(spark, key, sdir) -> "CollectionVectorIndex | None":
-    """Load a committed sidecar (CURRENT pointer -> immutable version
-    dir). Version/shape mismatches read as a miss, never an error."""
-    global load_count
+def _load_sidecar(spark, vdir: str, meta: dict) -> CollectionVectorIndex:
+    """The handle of a committed version dir."""
     import numpy as np
 
-    vdir = _current_version_dir(sdir)
-    if vdir is None:
-        return None
-    meta_path = os.path.join(vdir, "meta.json")
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta.get("version") != _META_VERSION:
-            return None
-        arrs = np.load(os.path.join(vdir, "arrays.npz"))
-        codebooks = None
-        if meta["n_codebooks"]:
-            codebooks = [arrs[f"cb{i}"] for i in range(meta["n_codebooks"])]
-        postings = spark.read.parquet(os.path.join(vdir, "postings"))
-        idx = CollectionVectorIndex(
-            centroids=arrs["centroids"], cell_sizes=arrs["cell_sizes"],
-            corpus_n=int(meta["corpus_n"]), zero_n=int(meta["zero_n"]),
-            postings=postings, vec_name=meta["vec_name"], d=int(meta["d"]),
-            id_name=meta["id_name"], family=meta["family"],
-            codebooks=codebooks, sidecar=vdir,
-        )
-    except Exception:
-        return None
-    _CACHE[key] = idx
-    load_count += 1
-    return idx
+    arrs = np.load(os.path.join(vdir, "arrays.npz"))
+    codebooks = None
+    if meta["n_codebooks"]:
+        codebooks = [arrs[f"cb{i}"] for i in range(meta["n_codebooks"])]
+    return CollectionVectorIndex(
+        centroids=arrs["centroids"], cell_sizes=arrs["cell_sizes"],
+        corpus_n=int(meta["corpus_n"]), zero_n=int(meta["zero_n"]),
+        postings=spark.read.parquet(os.path.join(vdir, "postings")),
+        vec_name=meta["vec_name"], d=int(meta["d"]),
+        id_name=meta["id_name"], family=meta["family"],
+        codebooks=codebooks, sidecar=vdir,
+    )
 
 
 def get_collection_vector_index(
@@ -317,20 +188,14 @@ def get_collection_vector_index(
     family: cells capture direction and the exact re-rank restores
     magnitude — extreme norm variance degrades recall, a documented
     MIPS-on-IVF limitation."""
-    global build_count
-    key = _cache_key(backend, db, coll, mongo_path, d, family)
-    idx = _CACHE.get(key)
-    if idx is not None:
-        return idx
     if id_name is None or id_name not in bdf.columns:
         return None  # no stable id: candidates can't round-trip the scan
-
-    durable = key[1] is not None and not isinstance(key[1], int)
-    sdir = _sidecar_dir(key)
-    if durable:
-        idx = _load_sidecar(bdf.sparkSession, key, sdir)
-        if idx is not None:
-            return idx
+    key, durable = backend_key(backend, db, coll, mongo_path, d, family)
+    spark = bdf.sparkSession
+    idx = _STORE.lookup(key, durable,
+                        lambda vdir, meta: _load_sidecar(spark, vdir, meta))
+    if idx is not None:
+        return idx
 
     import numpy as np
     from pyspark.ml.clustering import KMeans
@@ -352,11 +217,10 @@ def get_collection_vector_index(
     from duckdb_mongo_spark.ops.similarity import fixed_layout_sample
 
     sample_src, n_fit = fixed_layout_sample(
-        feat, id_name, _fit_sample(), ["__features"])
+        feat, id_name, FIT_SAMPLE, ["__features"])
     if n_fit == 0:
         return None  # nothing to fit (e.g. all-zero cos corpus) — exact path
-    k_env = os.environ.get("SPARK_GRAFT_IVF_CENTROIDS")
-    k = int(k_env) if k_env else max(1, min(1024, round(math.sqrt(n_fit) * 2)))
+    k = max(1, min(1024, round(math.sqrt(n_fit) * 2)))
     k = min(k, n_fit)
     model = KMeans(k=k, seed=seed, featuresCol="__features",
                    predictionCol="__cell").fit(sample_src)
@@ -368,7 +232,7 @@ def get_collection_vector_index(
         nrm.alias("__norm"))
 
     codebooks = None
-    if d >= _pq_min_dim():
+    if d >= PQ_MIN_DIM:
         from duckdb_mongo_spark.ops.similarity import pq_encode, pq_train
 
         # ~8 dims per subspace (FAISS-typical granularity): 32 one-byte
@@ -384,7 +248,7 @@ def get_collection_vector_index(
             code_src = fit_src.withColumn("__nvec", feat_arr)
             code_vec = "__nvec"
         codebooks = pq_train(code_src, m=m, c_id=id_name, c_vec=code_vec,
-                             seed=seed, fit_sample_size=_fit_sample())
+                             seed=seed, fit_sample_size=FIT_SAMPLE)
         codes = (pq_encode(code_src, codebooks, c_id=id_name, c_vec=code_vec)
                  .withColumnRenamed(id_name, "__pk"))
         assigned = assigned.join(codes, "__pk")
@@ -398,17 +262,14 @@ def get_collection_vector_index(
             zeros = zeros.withColumn("code", F.lit(None).cast("binary"))
         postings = postings.unionByName(zeros)
 
-    # Fresh immutable version dir; committed only by the CURRENT rename
-    # below, so concurrent builders and readers never interleave files.
-    vname = f"v-{uuid.uuid4().hex[:16]}"
-    vdir = os.path.join(sdir, vname)
-    os.makedirs(vdir, exist_ok=True)
+    # fresh immutable version dir, published only by the store's commit
+    vdir = _STORE.new_version(_STORE.dir(key))
     post_dir = os.path.join(vdir, "postings")
     nparts = max(1, min(64, math.ceil(k / 16)))
     (postings.repartitionByRange(nparts, "__cell")
      .sortWithinPartitions("__cell")
      .write.mode("overwrite").parquet(post_dir))
-    postings = bdf.sparkSession.read.parquet(post_dir)
+    postings = spark.read.parquet(post_dir)
 
     # EXACT cell sizes from the written sidecar (k+1 driver rows) —
     # probe arithmetic is then a guarantee, not a sample-scaled guess
@@ -428,25 +289,15 @@ def get_collection_vector_index(
             arrays[f"cb{i}"] = np.asarray(cb, dtype=np.float64)
         n_cb = len(codebooks)
     np.savez(os.path.join(vdir, "arrays.npz"), **arrays)
-    meta = {"version": _META_VERSION, "d": d, "family": family,
-            "id_name": id_name, "vec_name": vec_name,
-            "mongo_path": mongo_path, "corpus_n": corpus_n,
-            "zero_n": zero_n, "k": k, "n_codebooks": n_cb}
-    with open(os.path.join(vdir, "meta.json"), "w") as f:
-        json.dump(meta, f)  # last file within the version dir
-    prev = _current_version_dir(sdir)  # the version this commit supersedes
-    _commit_version(sdir, vname)  # atomic publish: old version stays intact
-    _gc_stale_versions(sdir, keep={vname} | (
-        {os.path.basename(prev)} if prev else set()))
-
-    idx = CollectionVectorIndex(
+    meta = {"d": d, "family": family, "id_name": id_name,
+            "vec_name": vec_name, "mongo_path": mongo_path,
+            "corpus_n": corpus_n, "zero_n": zero_n, "k": k,
+            "n_codebooks": n_cb}
+    return _STORE.commit(key, vdir, meta, CollectionVectorIndex(
         centroids=centroids, cell_sizes=cell_sizes, corpus_n=corpus_n,
         zero_n=zero_n, postings=postings, vec_name=vec_name, d=d,
         id_name=id_name, family=family, codebooks=codebooks, sidecar=vdir,
-    )
-    _CACHE[key] = idx
-    build_count += 1
-    return idx
+    ))
 
 
 def probe_cells(index: CollectionVectorIndex, qv, num_candidates: int):

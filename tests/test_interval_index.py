@@ -359,3 +359,18 @@ class TestCatalogHygiene:
         assert not os.path.exists(old.sidecar)
         assert not spark.catalog.tableExists(old._table_name())
         assert spark.catalog.tableExists(new._table_name())
+
+    def test_drop_sidecars_drops_their_tables(self, spark, events, tmp_path,
+                                              monkeypatch):
+        monkeypatch.setenv("SPARK_GRAFT_INTERVAL_INDEX_DIR",
+                           str(tmp_path / "ivx"))
+        src = self._source(spark, events, tmp_path)
+        before = self._ivx_tables(spark)
+        idx = build_interval_envelope_index(src, "ts", ["user_id"], DAY)
+        assert idx.bucket is not None
+        idx.df(spark)
+        assert spark.catalog.tableExists(idx._table_name())
+        assert ii.drop_interval_index_sidecars() == 1
+        assert not os.path.exists(idx.sidecar)
+        assert not spark.catalog.tableExists(idx._table_name())
+        assert self._ivx_tables(spark) == before

@@ -106,7 +106,7 @@ class TestAnnRouting:
         mf.df().collect()
         idx = VI.cached_index(be, "main", "vecs", "emb", 32, "cos")
         assert idx is not None
-        assert idx.sidecar and idx.sidecar.startswith(VI._index_root())
+        assert idx.sidecar and idx.sidecar.startswith(VI._STORE.root())
         import os as _os
 
         assert _os.path.isfile(_os.path.join(idx.sidecar, "meta.json"))
@@ -259,7 +259,7 @@ class TestAnnRouting:
         v1_dir = idx1.sidecar
         v1_rows = idx1.postings.count()
         sdir = os.path.dirname(v1_dir)
-        assert VI._current_version_dir(sdir) == v1_dir
+        assert VI._STORE.current(sdir) == v1_dir
 
         VI.clear_vector_index_cache()
         orig_load = VI._load_sidecar
@@ -279,7 +279,7 @@ class TestAnnRouting:
         assert os.path.isfile(os.path.join(v1_dir, "meta.json"))
         # the pointer swapped atomically to the new version; a fresh
         # session resolves v2 (reload, not rebuild)
-        assert VI._current_version_dir(sdir) == v2_dir
+        assert VI._STORE.current(sdir) == v2_dir
         VI.clear_vector_index_cache()
         l0, b0 = VI.load_count, VI.build_count
         mf3 = mongo_scan(spark, be, "main", "vecs",
@@ -290,7 +290,7 @@ class TestAnnRouting:
         assert idx3.sidecar == v2_dir
         # an uncommitted (killed mid-write) build is invisible to readers
         os.makedirs(os.path.join(sdir, "v-torn"), exist_ok=True)
-        assert VI._current_version_dir(sdir) == v2_dir
+        assert VI._STORE.current(sdir) == v2_dir
         # drop reclaims every version of the fingerprint, stale included
         VI.drop_vector_index_sidecars()
         assert not os.path.isdir(v1_dir) and not os.path.isdir(v2_dir)
@@ -317,7 +317,7 @@ class TestAnnRouting:
         assert len(vdirs) == 2  # committed + its immediate predecessor
         assert os.path.basename(idx.sidecar) in vdirs
         # CURRENT resolves to the committed survivor and reloads cleanly
-        assert VI._current_version_dir(sdir) == idx.sidecar
+        assert VI._STORE.current(sdir) == idx.sidecar
         VI.clear_vector_index_cache()
         l0 = VI.load_count
         mf = mongo_scan(spark, be, "main", "vecs",
@@ -350,7 +350,7 @@ def adc_corpus(tmp_path_factory):
 
 class TestAdcPreselect:
     def test_pq_sidecar_preselect(self, spark, adc_corpus, monkeypatch):
-        monkeypatch.setenv("SPARK_GRAFT_ANN_ADC_FACTOR", "0")
+        monkeypatch.setattr(VI, "ADC_FACTOR", 0.0)
         be, q = adc_corpus
         mf = mongo_scan(spark, be, "main", "vecs",
                         pipeline=_pipe(q, nc=120))
@@ -369,7 +369,7 @@ class TestAdcPreselect:
         # pre-filter semantics: the filter restricts candidates BEFORE
         # the numCandidates cut, so ADC (which can't see filter columns
         # in the narrow sidecar) is bypassed
-        monkeypatch.setenv("SPARK_GRAFT_ANN_ADC_FACTOR", "0")
+        monkeypatch.setattr(VI, "ADC_FACTOR", 0.0)
         be, q = adc_corpus
         mf = mongo_scan(spark, be, "main", "vecs",
                         pipeline=_pipe(q, nc=120,
