@@ -709,8 +709,6 @@ class MongoFrame:
             # pins the partitioned Python-DataSource scan — both are
             # explicit route pins the native path must respect
             return None
-        if _os.environ.get("SPARK_GRAFT_NATIVE_SCAN", "1") == "0":
-            return None
         if self.manual_pipeline is not None or self.manual_filter is not None:
             return None
         if self.num_partitions:  # explicit partition-count pin: datasource
@@ -912,9 +910,12 @@ class MongoFrame:
         pass-through"); on a local columnar backend there is no server, and
         the single-stream interpreter fallback would funnel the whole
         collection through one Python task. Instead, a stage-1
-        ``$vectorSearch`` (any shape) or ``$search`` with a single ``text``
-        operator + following ``$limit`` (see ``_route_search_text``)
-        compiles to a distributed scorer. The ``$vectorSearch`` plan:
+        ``$vectorSearch`` (any shape), a ``$search`` whose operator tree
+        is routable + following ``$limit`` (one compiler for bare
+        operators and compounds, ``_route_search_text``), a
+        ``$searchMeta`` count or facet (``_route_search_meta``) or a
+        ``$geoNear`` (``_route_geo_near``) compiles to a distributed
+        plan. The ``$vectorSearch`` plan:
 
         - partitioned scan with the spec's ``filter`` pushed as ``$match``
           (the existing manual_filter pushdown, A23);
@@ -966,81 +967,6 @@ class MongoFrame:
             coll_schema = resolve_schema(self.backend, self.db, self.coll)
             routed = self._route_search_text(spec, coll_schema)
             if routed is None:
-                body = dict(spec)
-                body.pop("index", None)
-                index_payload = body.pop("__indexDefinition__", None)
-                if "highlight" in body:
-                    # r12: highlight rides the phrase/autocomplete/cond
-                    # fallback routes too — parsed from the original
-                    # spec, rendered over the survivors in _routed_tail
-                    hlp = self._parse_routed_highlight(spec)
-                    if hlp is None:
-                        return None
-                    self._rt_highlight = hlp
-                    body.pop("highlight")
-                if index_payload is not None and len(body) == 1:
-                    # r10: same gate as _parse_search_clauses — the
-                    # phrase/autocomplete/cond fallbacks route when the
-                    # index leaves the tree at the engine default, or
-                    # (phrase) under one custom analyzer pair, which the
-                    # phrase route's token/query analysis picks up from
-                    # the stashed ctx (mql/search_index)
-                    from duckdb_mongo_spark.mql.search_index import (
-                        RoutedIndexCtx, SearchIndex, Unroutable,
-                        rewrite_spec_tree, text_route_analyzers)
-                    try:
-                        index = SearchIndex.from_payload(index_payload)
-                        (bop, bspec), = body.items()
-                        if not isinstance(bspec, dict):
-                            return None
-                        bop, bspec = rewrite_spec_tree(bop, bspec, index)
-                        mode, _ = text_route_analyzers(
-                            index, bop, bspec)
-                        if mode == "decline":
-                            self._rt_analyzer = None
-                            return None
-                        self._rt_analyzer = (RoutedIndexCtx(index)
-                                             if mode == "custom" else None)
-                        body = {bop: bspec}
-                        if mode == "custom" and bop == "autocomplete":
-                            # bare autocomplete under an index: wrap as
-                            # a single-must compound so it rides the
-                            # full routed-text machinery (identical
-                            # semantics — a must's score IS the clause
-                            # score) with the per-path gram/fold/
-                            # analyzer options the clause parser pins
-                            wrapped = {k: v for k, v in spec.items()
-                                       if k != "autocomplete"}
-                            wrapped["compound"] = {"must": [{bop: bspec}]}
-                            routed = self._route_search_text(
-                                wrapped, coll_schema)
-                    except (ValueError, Unroutable):
-                        return None  # interpreter raises / handles exactly
-                if routed is None and len(body) == 1 \
-                        and "queryString" in body:
-                    # translate first: a queryString can reduce to a
-                    # bare phrase, which routes through the chain below
-                    top, tspec = self._translate_query_string(
-                        body["queryString"])
-                    if top is not None:
-                        body = {top: tspec}
-                if routed is not None:
-                    pass  # wrapped bare autocomplete already routed
-                elif len(body) == 1 and "phrase" in body:
-                    routed = self._route_search_phrase(
-                        body["phrase"], coll_schema)
-                elif len(body) == 1 and "autocomplete" in body \
-                        and index_payload is None:
-                    # under ANY index definition, bare autocomplete
-                    # routes via the compound wrap above or not at all —
-                    # the plain phrase route has no per-path gram/fold
-                    # machinery and would silently ignore the mapping
-                    routed = self._route_search_phrase(
-                        body["autocomplete"], coll_schema, op="autocomplete")
-                elif len(body) == 1 and next(iter(body)) in (
-                        "equals", "range", "in", "exists"):
-                    routed = self._route_search_cond_op(body, coll_schema)
-            if routed is None:
                 return None
             scored, limit, meta_name, score_col = routed
             # the $limit consumed by the routed top-k is pipeline[1]
@@ -1084,6 +1010,21 @@ class MongoFrame:
         return self._routed_tail(
             scored, limit, meta_name, score_col, rest, coll_schema, tag)
 
+    def _base_df(self, coll_schema, manual_filter=None) -> DataFrame:
+        """The routed paths' base scan: the whole collection (or the
+        ``manual_filter`` subset) through the ordinary ``df()`` path
+        choice, with this frame's mode, partitioning and route pin.
+        Records the chosen path in ``_routed_base_path``."""
+        base = MongoFrame(
+            spark=self.spark, backend=self.backend, db=self.db,
+            coll=self.coll, schema=coll_schema, schema_mode=self.schema_mode,
+            num_partitions=self.num_partitions, manual_filter=manual_filter,
+            direct=self.direct,
+        )
+        bdf = base.df()
+        self._routed_base_path = base.last_exec_path
+        return bdf
+
     def _route_vector_search(self, spec, coll_schema):
         """Compile a ``$vectorSearch`` spec against the collection schema
         to a distributed scored-and-top-k'd DataFrame. Returns
@@ -1119,15 +1060,7 @@ class MongoFrame:
                 int(spec["numCandidates"]), qv, similarity, vfilter,
                 fspec, coll_schema, d)
         if bdf is None:
-            base = MongoFrame(
-                spark=self.spark, backend=self.backend, db=self.db,
-                coll=self.coll, schema=coll_schema,
-                schema_mode=self.schema_mode,
-                num_partitions=self.num_partitions, manual_filter=vfilter,
-                direct=self.direct,
-            )
-            bdf = base.df()
-            self._routed_base_path = base.last_exec_path
+            bdf = self._base_df(coll_schema, manual_filter=vfilter)
         vec = F.col(fspec.name).cast("array<double>")
         qarr = F.array(*[F.lit(float(x)) for x in qv])
         dot = F.aggregate(
@@ -1206,13 +1139,7 @@ class MongoFrame:
         idx = VI.cached_index(
             self.backend, self.db, self.coll, fspec.mongo_path, d, family)
         if idx is None:
-            base = MongoFrame(
-                spark=self.spark, backend=self.backend, db=self.db,
-                coll=self.coll, schema=coll_schema,
-                schema_mode=self.schema_mode,
-                num_partitions=self.num_partitions, direct=self.direct,
-            )
-            bdf = base.df()
+            bdf = self._base_df(coll_schema)
             id_name = "_id" if "_id" in bdf.columns else None
             idx = VI.get_collection_vector_index(
                 self.backend, self.db, self.coll, bdf, fspec.name,
@@ -1243,14 +1170,7 @@ class MongoFrame:
             mfilter = {"_id": {"$in": ids}}
             if vfilter is not None:
                 mfilter = {"$and": [mfilter, vfilter]}
-            base = MongoFrame(
-                spark=self.spark, backend=self.backend, db=self.db,
-                coll=self.coll, schema=coll_schema,
-                schema_mode=self.schema_mode,
-                num_partitions=self.num_partitions, manual_filter=mfilter,
-                direct=self.direct,
-            )
-            cand = base.df()
+            cand = self._base_df(coll_schema, manual_filter=mfilter)
             if vfilter is None or probed >= idx.corpus_n or reprobes >= 3:
                 break
             eff = cand.count()  # one job over the id-pruned scan
@@ -1502,16 +1422,12 @@ class MongoFrame:
         if ctx is not None and any(
                 ctx.pair_names(fs.mongo_path) is None for fs in fuzzy_fs):
             return spec  # uncovered fuzzy path — interpreter semantics
-        base = MongoFrame(
-            spark=self.spark, backend=self.backend, db=self.db,
-            coll=self.coll, schema=coll_schema, schema_mode=self.schema_mode,
-            num_partitions=self.num_partitions, direct=self.direct,
-        )
         # r11: under a custom index analyzer the dictionary job
         # tokenizes each path with ITS index analyzer (the vocabulary a
         # Lucene fuzzy query expands against is the indexed terms)
         tdf = self._with_oracle_tokens(
-            base.df(), fuzzy_fs, analyze=self._ctx_index_fns(ctx, fuzzy_fs))
+            self._base_df(coll_schema), fuzzy_fs,
+            analyze=self._ctx_index_fns(ctx, fuzzy_fs))
         parts = [
             tdf.select(
                 F.explode(F.col(f"__rt_toks_{fs.name}")).alias("__t"),
@@ -2457,14 +2373,7 @@ class MongoFrame:
                        if gj_type is not None else F.lit(True))
         else:
             return None
-        base = MongoFrame(
-            spark=self.spark, backend=self.backend, db=self.db,
-            coll=self.coll, schema=coll_schema, schema_mode=self.schema_mode,
-            num_partitions=self.num_partitions,
-            manual_filter=spec.get("query"), direct=self.direct,
-        )
-        bdf = base.df()
-        self._routed_base_path = base.last_exec_path
+        bdf = self._base_df(coll_schema, manual_filter=spec.get("query"))
         x = F.element_at(coords, 1)
         y = F.element_at(coords, 2)
         valid = (coords.isNotNull() & (F.size(coords) == 2)
@@ -3321,12 +3230,13 @@ class MongoFrame:
         return paths, mc, mp, sources
 
     def _parse_search_clauses(self, spec, fm):
-        """Shared $search/$searchMeta spec parse: a single ``text``
-        operator or ``compound`` of routable clauses (text must/should;
-        equals/range/in/exists or text for filter/mustNot). Returns
-        ``(text_must, text_should, cond_filters, mustnot, msm, has_must,
-        has_filter, has_should, count_spec)`` or None for shapes that
-        need the interpreter."""
+        """Shared $search/$searchMeta spec parse: a ``compound`` of
+        routable clauses, or any single routable operator read as a
+        one-clause ``must`` (filter clauses are equals/range/in/exists;
+        must/should/mustNot take every clause ``scored_clause`` parses).
+        Returns ``(text_must, text_should, cond_filters, mustnot, msm,
+        has_must, has_filter, has_should, count_spec)`` or None for
+        shapes that need the interpreter."""
         body = dict(spec)
         body.pop("index", None)
         index_payload = body.pop("__indexDefinition__", None)
@@ -3448,73 +3358,37 @@ class MongoFrame:
             c = self._search_filter_cond(cl, fm)
             return None if c is None else ("cond", c)  # (Column, mod)
 
-        if op == "text":
-            tc = self._parse_text_clause(opspec, fm)
-            if tc is None:
-                return None
-            text_must.append(("text", tc))
-            has_must, has_filter, has_should = True, False, False
-        elif op == "near":
-            nc = self._parse_near_clause(opspec, fm)
-            if nc is None:
-                return None
-            text_must.append(("near", nc))
-            has_must, has_filter, has_should = True, False, False
-        elif op == "wildcard":
-            wc = self._parse_wildcard_clause(opspec, fm)
-            if wc is None:
-                return None
-            text_must.append(("wc", wc))
-            has_must, has_filter, has_should = True, False, False
-        elif op == "regex":
-            rx = self._parse_wildcard_clause(opspec, fm, op="regex")
-            if rx is None:
-                return None
-            text_must.append(("rx", rx))
-            has_must, has_filter, has_should = True, False, False
-        elif op == "embeddedDocument":
-            ec = self._parse_embedded_clause(opspec, fm)
-            if ec is None:
-                return None
-            text_must.append(("embdoc", ec))
-            has_must, has_filter, has_should = True, False, False
-        elif op in ("geoWithin", "geoShape"):
-            gc = self._parse_geo_clause({op: opspec}, fm)
-            if gc is None:
-                return None
-            text_must.append(("geo", gc))
-            has_must, has_filter, has_should = True, False, False
-        elif op == "compound":
-            known = {"must", "should", "mustNot", "filter",
-                     "minimumShouldMatch"}
-            if set(opspec) - known:
-                return None
-            msm = int(opspec.get("minimumShouldMatch", 0))
-            for cl in _as_list(opspec.get("must")):
-                sc = scored_clause(cl)
-                if sc is None:
-                    return None  # phrase/nested compound — interpreter
-                text_must.append(sc)
-            for cl in _as_list(opspec.get("should")):
-                sc = scored_clause(cl)
-                if sc is None:
-                    return None
-                text_should.append(sc)
-            for cl in _as_list(opspec.get("filter")):
-                c = self._search_filter_cond(cl, fm)
-                if c is None:
-                    return None
-                cond_filters.append(c[0])  # mod parsed, never scores
-            for cl in _as_list(opspec.get("mustNot")):
-                sc = scored_clause(cl)
-                if sc is None:
-                    return None
-                mustnot.append(sc)
-            has_must = bool(opspec.get("must"))
-            has_filter = bool(opspec.get("filter"))
-            has_should = bool(text_should)
-        else:
+        if op != "compound":
+            # a bare operator is a one-clause must: a must's score IS the
+            # clause score, so every operator has one parse and one plan
+            opspec = {"must": [{op: opspec}]}
+        known = {"must", "should", "mustNot", "filter", "minimumShouldMatch"}
+        if set(opspec) - known:
             return None
+        msm = int(opspec.get("minimumShouldMatch", 0))
+        for cl in _as_list(opspec.get("must")):
+            sc = scored_clause(cl)
+            if sc is None:
+                return None
+            text_must.append(sc)
+        for cl in _as_list(opspec.get("should")):
+            sc = scored_clause(cl)
+            if sc is None:
+                return None
+            text_should.append(sc)
+        for cl in _as_list(opspec.get("filter")):
+            c = self._search_filter_cond(cl, fm)
+            if c is None:
+                return None
+            cond_filters.append(c[0])  # mod parsed, never scores
+        for cl in _as_list(opspec.get("mustNot")):
+            sc = scored_clause(cl)
+            if sc is None:
+                return None
+            mustnot.append(sc)
+        has_must = bool(opspec.get("must"))
+        has_filter = bool(opspec.get("filter"))
+        has_should = bool(text_should)
         return (text_must, text_should, cond_filters, mustnot, msm,
                 has_must, has_filter, has_should, count_spec)
 
@@ -3790,6 +3664,31 @@ class MongoFrame:
             else:
                 yield kind, payload
 
+    def _constant_score(self, parsed):
+        """True when every document the tree matches gets the same
+        score: no should clause (a hit adds per document) and every
+        must clause, nested compounds included, is a constant-score
+        kind (condition, phrase, autocomplete, wildcard, regex, geo)
+        without a ``boost.path`` or ``function`` modifier. filter and
+        mustNot clauses never score."""
+        text_must, text_should = parsed[0], parsed[1]
+        if text_should:
+            return False
+        for kind, payload in text_must:
+            if kind == "compound":
+                if not self._constant_score(payload):
+                    return False
+                continue
+            if kind == "cond":
+                mod = payload[1]
+            elif kind in ("phrase", "auto", "wc", "rx", "geo"):
+                mod = payload[3]
+            else:
+                return False  # text, near, embeddedDocument
+            if mod is not None and mod[0] in ("boost_col", "func"):
+                return False
+        return True
+
     def _iter_text_clauses(self, parsed):
         """Every text clause anywhere in the parsed tree (must/should/
         mustNot, nested compounds included) — drives token columns,
@@ -3800,6 +3699,28 @@ class MongoFrame:
                 yield payload
             elif kind == "compound":
                 yield from self._iter_text_clauses(payload)
+
+    def _token_fspecs(self, parsed):
+        """Field specs of every path whose ``__rt_toks_<name>`` column
+        the parsed tree reads, deduplicated in walk order: text clause
+        paths, then phrase/autocomplete paths. Wildcard/regex/geo match
+        raw values and add none, EXCEPT index-mode allowAnalyzedField
+        wildcard/regex, which match the analyzed token columns too
+        (r10); index-mode autocomplete brings its own per-path
+        columns."""
+        fspecs, seen = [], set()
+        groups = [fss for fss, _t, _m in self._iter_text_clauses(parsed)]
+        for kind, (fss, _q, arg, _m) in self._iter_phrase_clauses(parsed):
+            if kind in ("wc", "rx") and isinstance(arg, dict):
+                groups.append(arg["toks_fs"])
+            elif kind == "phrase" or (kind == "auto" and len(arg) <= 2):
+                groups.append(fss)
+        for fss in groups:
+            for fs in fss:
+                if fs.name not in seen:
+                    seen.add(fs.name)
+                    fspecs.append(fs)
+        return fspecs
 
     def _route_search_meta(self, spec, coll_schema):
         """Distributed ``$searchMeta``: one aggregate job counts the
@@ -3860,34 +3781,8 @@ class MongoFrame:
         phrase_clauses = list(self._iter_phrase_clauses(parsed))
         if not all_text and not phrase_clauses:
             return None  # condition-only: nothing to tokenize — interpreter
-        fspecs, seen = [], set()
-        for fss, _terms, _mod in all_text:
-            for fs in fss:
-                if fs.name not in seen:
-                    seen.add(fs.name)
-                    fspecs.append(fs)
-        for _kind, (fss, _q, _arg, _mod) in phrase_clauses:
-            if _kind in ("wc", "rx", "geo"):
-                # wildcard/regex/geo match raw values — no token cols,
-                # EXCEPT index-mode allowAnalyzedField wildcard/regex,
-                # which matches the analyzed token columns too (r10)
-                if _kind in ("wc", "rx") and isinstance(_arg, dict):
-                    fss = _arg["toks_fs"]
-                else:
-                    continue
-            if _kind == "auto" and len(_arg) > 2:
-                continue  # index-mode autocomplete: own token columns
-            for fs in fss:
-                if fs.name not in seen:
-                    seen.add(fs.name)
-                    fspecs.append(fs)
-        base = MongoFrame(
-            spark=self.spark, backend=self.backend, db=self.db,
-            coll=self.coll, schema=coll_schema, schema_mode=self.schema_mode,
-            num_partitions=self.num_partitions, direct=self.direct,
-        )
-        bdf = base.df()
-        self._routed_base_path = base.last_exec_path
+        fspecs = self._token_fspecs(parsed)
+        bdf = self._base_df(coll_schema)
         custom_an = getattr(self, "_rt_analyzer", None)
         ac_specs = self._ac_token_specs(phrase_clauses)
         lc_specs = self._lc_specs()
@@ -4001,21 +3896,11 @@ class MongoFrame:
         if op is not None:
             if not (isinstance(op, dict) and len(op) == 1):
                 return None
-            if next(iter(op)) not in ("text", "compound"):
-                # single-operator facet (range/equals/phrase/...): a
-                # one-must compound matches the same docs
-                op = {"compound": {"must": [op]}}
             parsed = self._parse_search_clauses(dict(op), fm)
             if parsed is None:
                 return None
 
-        base = MongoFrame(
-            spark=self.spark, backend=self.backend, db=self.db,
-            coll=self.coll, schema=coll_schema, schema_mode=self.schema_mode,
-            num_partitions=self.num_partitions, direct=self.direct,
-        )
-        bdf = base.df()
-        self._routed_base_path = base.last_exec_path
+        bdf = self._base_df(coll_schema)
 
         def facet_entries():
             """One array<struct<f,k>> per facet; string keys verbatim,
@@ -4089,28 +3974,8 @@ class MongoFrame:
             tdf = bdf
             match_cond = F.lit(True)
             if parsed is not None:
-                fspecs, seen = [], set()
-                for fss, _t, _m in self._iter_text_clauses(parsed):
-                    for fs in fss:
-                        if fs.name not in seen:
-                            seen.add(fs.name)
-                            fspecs.append(fs)
+                fspecs = self._token_fspecs(parsed)
                 phrase_clauses = list(self._iter_phrase_clauses(parsed))
-                for _k, (fss, _a, _arg, _m) in phrase_clauses:
-                    if _k in ("wc", "rx"):
-                        # raw-value matching — EXCEPT index-mode
-                        # allowAnalyzedField, which matches the analyzed
-                        # token columns too (r11, as in the text route)
-                        if isinstance(_arg, dict):
-                            fss = _arg["toks_fs"]
-                        else:
-                            continue
-                    if _k == "auto" and len(_arg) > 2:
-                        continue  # index-mode autocomplete: own columns
-                    for fs in fss:
-                        if fs.name not in seen:
-                            seen.add(fs.name)
-                            fspecs.append(fs)
                 ac_specs = self._ac_token_specs(phrase_clauses)
                 lc_specs = self._lc_specs()
                 if fspecs or ac_specs or lc_specs:
@@ -4186,188 +4051,35 @@ class MongoFrame:
                 out_facets[name] = {"buckets": buckets}
         return [{"count": {"lowerBound": total}, "facet": out_facets}]
 
-    def _route_search_cond_op(self, clause, coll_schema):
-        """Top-level constant-score ``$search`` operators (equals /
-        range / in / exists) + ``$limit``: selection is one translated
-        JVM condition, every match scores 1.0 (the oracle's constant),
-        so the plan is a pushed filter + limit — no scoring pass at
-        all (lowercase-normalized token paths add one Arrow pass for
-        the oracle-lowered match column — r11). Tie order among the
-        equal scores is unspecified."""
-        fm = {f.mongo_path: f for f in coll_schema.fields}
-        self._rt_lc_fs = {}
-        got = self._search_filter_cond(clause, fm)
-        if got is None:
-            return None
-        cond, cmod = got
-        nxt = (self.manual_pipeline[1]
-               if len(self.manual_pipeline) > 1 else None)
-        if not (isinstance(nxt, dict) and len(nxt) == 1
-                and next(iter(nxt)) == "$limit"):
-            return None
-        limit = int(nxt["$limit"])
-        base = MongoFrame(
-            spark=self.spark, backend=self.backend, db=self.db,
-            coll=self.coll, schema=coll_schema, schema_mode=self.schema_mode,
-            num_partitions=self.num_partitions, direct=self.direct,
-        )
-        bdf = base.df()
-        self._routed_base_path = base.last_exec_path
-        lc_specs = self._lc_specs()
-        drop_cols = []
-        if lc_specs:
-            bdf = self._with_oracle_tokens(bdf, [], extra_specs=lc_specs)
-            drop_cols = [s[0] for s in lc_specs]
-        base_score = F.lit(1.0)
-        if cmod is not None:
-            mkind, v = cmod
-            if mkind == "constant":
-                base_score = F.lit(v)
-            elif mkind == "boost":
-                base_score = base_score * F.lit(v)
-            elif mkind == "boost_col":
-                base_score = base_score * v
-            else:  # func over the 1.0 base, 0-clamped like the oracle
-                fx = v(base_score)
-                base_score = F.when(fx > 0.0, fx).otherwise(F.lit(0.0))
-        scored = (bdf.where(cond)
-                  .withColumn("__rt_score", base_score)
-                  .limit(limit)
-                  .drop(*drop_cols))
-        return scored, limit, "searchScore", "__rt_score"
-
-    def _route_search_phrase(self, opspec, coll_schema, op="phrase"):
-        """Distributed ``$search {phrase}``/``{autocomplete}`` +
-        ``$limit``: constant-score selection, so the plan is a filter,
-        not a scorer. The predicate (subsequence-with-slop, or r8's
-        prefix matching with tokenOrder) is the ORACLE'S OWN matcher
-        (``mql/search._phrase_matches`` / ``_autocomplete_matches``)
-        run inside an Arrow-batched ``mapInPandas`` over the
-        partitioned scan's token arrays — distributed, and
-        match-identical to the interpreter by construction (same
-        CPython function; multibyte corpora get their token arrays from
-        the oracle's analyzer too, so the parity argument holds
-        off-ASCII). All matches score 1.0 (times any boost, or a
-        constant replacement), so which ``limit`` of >limit matches
-        return is unspecified — the same tie contract as equal BM25
-        scores."""
-        fm = {f.mongo_path: f for f in coll_schema.fields}
-        if op == "phrase":
-            pc = self._parse_phrase_clause(opspec, fm)
-        else:
-            pc = self._parse_autocomplete_clause(opspec, fm)
-        if pc is None:
-            return None
-        fspecs, queries, arg, mod = pc
-        nxt = (self.manual_pipeline[1]
-               if len(self.manual_pipeline) > 1 else None)
-        if not (isinstance(nxt, dict) and len(nxt) == 1
-                and next(iter(nxt)) == "$limit"):
-            return None
-        limit = int(nxt["$limit"])
-        base = MongoFrame(
-            spark=self.spark, backend=self.backend, db=self.db,
-            coll=self.coll, schema=coll_schema, schema_mode=self.schema_mode,
-            num_partitions=self.num_partitions, direct=self.direct,
-        )
-        bdf = base.df()
-        self._routed_base_path = base.last_exec_path
-        custom_an = getattr(self, "_rt_analyzer", None)
-        mb_known, mb_any = self._mb_lookup(fspecs)
-        if custom_an is None and not mb_any and not mb_known:
-            # cheap JVM pass: multibyte detection over the matched
-            # paths only (cached per collection+path afterwards)
-            stats = bdf.agg(
-                *[self._nonascii_agg(fs) for fs in fspecs]
-            ).collect()[0].asDict()
-            self._mb_store(fspecs, stats)
-            mb_any = any(stats.get(f"__nonascii_{fs.name}")
-                         for fs in fspecs)
-        if mb_any or custom_an is not None:
-            toks_df = self._with_oracle_tokens(
-                bdf, fspecs, analyze=self._ctx_index_fns(custom_an, fspecs))
-        else:
-            toks_df = bdf.select(
-                *bdf.columns,
-                *[self._tokens_of(fs).alias(f"__rt_toks_{fs.name}")
-                  for fs in fspecs],
-            )
-
-        tok_names = [f"__rt_toks_{fs.name}" for fs in fspecs]
-        out_schema = toks_df.schema
-
-        def kernel(batches):
-            from duckdb_mongo_spark.mql.search import (
-                _autocomplete_matches,
-                _phrase_matches,
-            )
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                mask = []
-                for row_toks in zip(*[pdf[n] for n in tok_names]):
-                    if op == "phrase":
-                        # r11: queries are analyzed PER PATH, aligned
-                        # positionally with the token columns
-                        hit = any(
-                            _phrase_matches(list(toks), q, arg)
-                            for toks, qs_p in zip(row_toks, queries)
-                            if toks is not None for q in qs_p)
-                    else:
-                        hit = any(
-                            _autocomplete_matches(
-                                list(toks), q, arg[0], arg[1])
-                            for toks in row_toks if toks is not None
-                            for q in queries)
-                    mask.append(hit)
-                yield pdf[mask]
-
-        base_score = F.lit(1.0)
-        if mod is not None:
-            mkind, v = mod
-            if mkind == "constant":
-                base_score = F.lit(v)
-            elif mkind == "boost":
-                base_score = base_score * F.lit(v)
-            elif mkind == "boost_col":
-                base_score = base_score * v
-            else:  # func: compiled expression over the 1.0 base, 0-clamped
-                fx = v(base_score)
-                base_score = F.when(fx > 0.0, fx).otherwise(F.lit(0.0))
-        scored = (
-            toks_df.mapInPandas(kernel, schema=out_schema)
-            .withColumn("__rt_score", base_score)
-            .limit(limit)
-            .drop(*tok_names)
-        )
-        return scored, limit, "searchScore", "__rt_score"
-
     def _route_search_text(self, spec, coll_schema):
-        """Distributed BM25 for a stage-1 ``$search`` followed by
-        ``$limit`` — a single ``text`` operator, or ``compound`` whose
-        must/should clauses are all ``text`` (scores sum, Lucene-style),
-        whose filter/mustNot clauses are equals/range/in/exists over
-        scalar fields (translated to JVM conditions — the "filter
-        clauses as $match" stance) or, for mustNot, ``text``
-        (term-containment check, since BM25 > 0 iff any query term is
-        present). ``minimumShouldMatch`` and the pure-should
-        at-least-one rule compile to a matched-clause counter condition.
+        """Distributed stage-1 ``$search`` followed by ``$limit``, for
+        every operator tree ``_parse_search_clauses`` accepts: a bare
+        operator is a one-clause ``must``, so text, phrase,
+        autocomplete, near, wildcard, regex, geo, embeddedDocument and
+        equals/range/in/exists compile through this one plan, alone or
+        inside ``compound`` (must/should scores sum, Lucene-style;
+        filter/mustNot gate; ``minimumShouldMatch`` and the pure-should
+        at-least-one rule compile to a matched-clause counter).
 
-        Two passes: one aggregate job for the corpus statistics
-        (N, per-path total token length, per-(path, term) doc
-        frequency — all bounded by the query's term count), then a
-        scored scan with distributed top-k. idf values are computed
-        driver-side in Python (same ``math.log`` as the interpreter
-        oracle, ``mql/search.py``) and enter the plan as literals, so
-        the JVM side only performs IEEE-deterministic +*/ in the
-        interpreter's exact association order — scores match the
-        single-stream oracle bit-for-bit (multibyte corpora tokenize
-        through the oracle's own analyzer — r8). A ``count``
-        spec rides the pass-1 job (containment-based matched total into
-        the $meta count slot). Returns None (fallback) for any other
-        $search shape (phrase, autocomplete, score boosts, nested
-        compound)."""
+        Pass 1 is one aggregate job, run only when the tree has a text
+        clause or a ``count``: the corpus statistics (N, per-path total
+        token length, per-(path, term) doc frequency — all bounded by
+        the query's term count; a committed text-stats sidecar replaces
+        it) and the containment-based matched total for the $meta count
+        slot. idf values are computed driver-side in Python (same
+        ``math.log`` as the interpreter oracle, ``mql/search.py``) and
+        enter the plan as literals, so the JVM side only performs
+        IEEE-deterministic +*/ in the interpreter's exact association
+        order — scores match the single-stream oracle bit-for-bit
+        (multibyte corpora tokenize through the oracle's own analyzer —
+        r8). Pass 2 is the scored scan with a distributed top-k; when
+        every match scores the same (``_constant_score``) and there is
+        no ``sort``, it is a plain limit, ties being unspecified.
+
+        Returns None (interpreter fallback) without a following
+        ``$limit``, for clauses outside the routed subset, and for a
+        ``count`` pass 1 cannot carry (a tree without shared token
+        columns, or with embedded or per-path gram clauses)."""
         import math
 
         from duckdb_mongo_spark.mql.search import _B, _K1
@@ -4403,11 +4115,12 @@ class MongoFrame:
         parsed = self._parse_search_clauses(spec, fm)
         if parsed is None:
             return None
-        (text_must, text_should, cond_filters, mustnot, msm,
-         has_must, has_filter, has_should, count_spec) = parsed
-        # union of every text-touched path anywhere in the tree (scoring,
+        count_spec = parsed[-1]
+        if not any(parsed[:4]):
+            return None  # no clause at all: the interpreter decides
+        # union of every token path anywhere in the tree (scoring,
         # mustNot and nested compounds — token parity matters for
-        # containment too); idf stats are computed for the same set (a
+        # containment too); idf stats are computed for the text paths (a
         # mustNot text clause's pairs are unused but harmless)
         all_text = list(self._iter_text_clauses(parsed))
         phrase_clauses = list(self._iter_phrase_clauses(parsed))
@@ -4415,34 +4128,17 @@ class MongoFrame:
         has_near = any(
             k in ("near", "wc", "rx")
             for k, _p in self._iter_all_clauses(parsed))
-        if not all_text and not phrase_clauses and not has_near \
-                and not embdoc_clauses:
-            # condition-only compound: nothing to score or tokenize —
-            # still routable (constant 0.0 scores, ties unspecified)
-            if not (cond_filters or mustnot) or count_spec is not None:
-                return None
-        fspecs = []
-        seen_paths = set()
-        for fss, _terms, _mod in all_text:
-            for fs in fss:
-                if fs.name not in seen_paths:
-                    seen_paths.add(fs.name)
-                    fspecs.append(fs)
-        for _kind, (fss, _q, _arg, _mod) in phrase_clauses:
-            if _kind in ("wc", "rx", "geo"):
-                # wildcard/regex/geo match raw values — no token cols,
-                # EXCEPT index-mode allowAnalyzedField wildcard/regex,
-                # which matches the analyzed token columns too (r10)
-                if _kind in ("wc", "rx") and isinstance(_arg, dict):
-                    fss = _arg["toks_fs"]
-                else:
-                    continue
-            if _kind == "auto" and len(_arg) > 2:
-                continue  # index-mode autocomplete: own token columns
-            for fs in fss:
-                if fs.name not in seen_paths:
-                    seen_paths.add(fs.name)
-                    fspecs.append(fs)
+        fspecs = self._token_fspecs(parsed)
+        ac_specs = self._ac_token_specs(phrase_clauses)
+        if count_spec is not None and (
+                not fspecs or embdoc_clauses or ac_specs):
+            # the matched total rides pass 1 over the shared token
+            # columns: a tree without any, or with embedded or per-path
+            # gram clauses, counts on the interpreter
+            return None
+        # pass 1 (one aggregate job) exists for BM25 statistics and the
+        # count total; without a text clause or a count it is skipped
+        need_stats = bool(all_text) or count_spec is not None
         # (path, term) pairs that need document frequencies — per-path
         # term lists (r11): each path's search analyzer decides which
         # terms need a df on that path
@@ -4454,17 +4150,9 @@ class MongoFrame:
                     if (fs.name, t) not in seen_pairs:
                         seen_pairs.add((fs.name, t))
                         df_pairs.append((fs, t))
-        base = MongoFrame(
-            spark=self.spark, backend=self.backend, db=self.db, coll=self.coll,
-            schema=coll_schema, schema_mode=self.schema_mode,
-            num_partitions=self.num_partitions, direct=self.direct,
-        )
-        bdf = base.df()
-        self._routed_base_path = base.last_exec_path
+        bdf = self._base_df(coll_schema)
         embdoc_cols = {}
         if embdoc_clauses:
-            if count_spec is not None:
-                return None  # count over embedded clauses: interpreter
             self._rt_eltok_cols = []
             for pe in embdoc_clauses:
                 prep = self._prepare_embedded_cols(pe, bdf)
@@ -4483,7 +4171,7 @@ class MongoFrame:
         # count specs keep the live pass — the matched total is a
         # corpus scan by definition.
         sidecar_stats = None
-        if fspecs and count_spec is None:
+        if all_text and count_spec is None:
             sidecar_stats = self._text_stats_lookup(fspecs, df_pairs)
         mb_known, mb_any = self._mb_lookup(fspecs)
         # r10 analyzer routing: a custom index analyzer ALWAYS tokenizes
@@ -4491,9 +4179,6 @@ class MongoFrame:
         # construction; no JVM twin, no multibyte detection dance);
         # index-mode autocomplete clauses bring their own per-path
         # token-column specs, produced in the same pass
-        ac_specs = self._ac_token_specs(phrase_clauses)
-        if ac_specs and count_spec is not None:
-            return None  # count over per-path-gram clauses: interpreter
         lc_specs = self._lc_specs()
         use_arrow = (bool(fspecs) and (mb_any or custom_an is not None)) \
             or bool(ac_specs) or bool(lc_specs)
@@ -4528,22 +4213,25 @@ class MongoFrame:
 
         def run_stats(sdf, pmap, detect):
             """Pass 1: corpus statistics (one aggregate row, bounded by
-            the query's path x term count); a multibyte detector per
-            path rides along on the first JVM-tokenized look at a
-            collection (detect=True) — a flagged path means JVM tokens
-            can diverge from the CPython oracle, so the caller swaps to
-            the oracle analyzer and recomputes."""
-            aggs = [F.count(F.lit(1)).alias("__n")]
-            for fs in fspecs:
-                tc = F.col(f"__rt_toks_{fs.name}")
-                if detect:
-                    aggs.append(self._nonascii_agg(fs))
-                aggs.append(F.sum(F.size(tc)).alias(f"__len_{fs.name}"))
-            for j, (fs, t) in enumerate(df_pairs):
-                tc = F.col(f"__rt_toks_{fs.name}")
-                aggs.append(F.sum(
-                    F.when(F.array_contains(tc, t), 1).otherwise(0)
-                ).alias(f"__df_{j}"))
+            the query's path x term count) when ``need_stats``; a
+            multibyte detector per path rides along on the first
+            JVM-tokenized look at a collection (detect=True), and runs
+            alone for a tree without text or count — a flagged path
+            means JVM tokens can diverge from the CPython oracle, so the
+            caller swaps to the oracle analyzer and recomputes. No
+            aggregate at all runs no job."""
+            aggs = ([self._nonascii_agg(fs) for fs in fspecs]
+                    if detect else [])
+            if need_stats:
+                aggs.append(F.count(F.lit(1)).alias("__n"))
+                for fs in fspecs:
+                    aggs.append(F.sum(F.size(F.col(f"__rt_toks_{fs.name}")))
+                                .alias(f"__len_{fs.name}"))
+                for j, (fs, t) in enumerate(df_pairs):
+                    tc = F.col(f"__rt_toks_{fs.name}")
+                    aggs.append(F.sum(
+                        F.when(F.array_contains(tc, t), 1).otherwise(0)
+                    ).alias(f"__df_{j}"))
             if count_spec is not None:
                 # $search count: the corpus-wide matched total rides the
                 # same pass-1 job (containment stands in for score > 0)
@@ -4551,18 +4239,14 @@ class MongoFrame:
                     parsed, None, pmap, embdoc_cols)
                 aggs.append(F.sum(
                     F.when(match_cond, 1).otherwise(0)).alias("__matched"))
-            return sdf.agg(*aggs).collect()[0].asDict()
+            return sdf.agg(*aggs).collect()[0].asDict() if aggs else {}
 
         toks_df, stats_df, ph_names, phrase_col_map = build_frames(use_arrow)
-        if fspecs and sidecar_stats is not None:
+        if sidecar_stats is not None:
             stats = sidecar_stats
-            n_docs = stats["__n"] or 0
-            if n_docs == 0:
-                return None
-        elif fspecs:
+        else:
             detect = not use_arrow and not mb_known
             stats = run_stats(stats_df, phrase_col_map, detect)
-            n_docs = stats["__n"] or 0
             if detect:
                 self._mb_store(fspecs, stats)
                 if any(stats.get(f"__nonascii_{fs.name}") for fs in fspecs):
@@ -4572,11 +4256,10 @@ class MongoFrame:
                     toks_df, stats_df, ph_names, phrase_col_map = \
                         build_frames(True)
                     stats = run_stats(stats_df, phrase_col_map, False)
-                    n_docs = stats["__n"] or 0
-            if n_docs == 0:
-                return None
-        else:
-            stats, n_docs = {}, 1  # condition-only compound: no scoring
+        # N = 1 stands in when no statistics are read (no text clause)
+        n_docs = (stats["__n"] or 0) if need_stats else 1
+        if n_docs == 0:
+            return None
         if count_spec is not None:
             total = int(stats.get("__matched") or 0)
             self._routed_count_meta = {
@@ -4630,13 +4313,6 @@ class MongoFrame:
         # recursive builder handles nested compounds identically
         total, cond = self._build_compound(
             parsed, clause_score, phrase_col_map, embdoc_cols)
-        # the sort option (r9) replaces relevance order: translated
-        # field orderings first (nulls last = the missing-last Atlas
-        # rule; dense AND sparse backends flatten absent to null), then
-        # score desc as the tie-break — the interpreter's pinned
-        # fallback (beyond that, ties are unspecified on both paths)
-        order = list(sort_cols or [])
-        order.append(F.col("__rt_score").desc())
         # r12: raw-substring prefilter for the scored scan — sound only
         # for the JVM tokenizer (token ⊆ lower(raw) by construction)
         # and kept to the pure text/cond shape (phrase/near/embedded
@@ -4653,15 +4329,21 @@ class MongoFrame:
             if prefilt is not None:
                 toks_df = toks_df.where(prefilt)
                 self._rt_prefiltered = True
-        scored = (
-            toks_df.withColumn("__rt_score", total)
-            .where(cond)
-            .orderBy(*order)
-            .limit(limit)
-            .drop(*[f"__rt_toks_{fs.name}" for fs in fspecs], *ph_names,
-                  *[s[0] for s in lc_specs],
-                  *getattr(self, "_rt_eltok_cols", []))
-        )
+        scored = toks_df.withColumn("__rt_score", total).where(cond)
+        if sort_cols or not self._constant_score(parsed):
+            # the sort option (r9) replaces relevance order: translated
+            # field orderings first (nulls last = the missing-last Atlas
+            # rule; dense AND sparse backends flatten absent to null),
+            # then score desc as the tie-break — the interpreter's
+            # pinned fallback (beyond that, ties are unspecified on both
+            # paths). Without a sort, a tree whose matches all score the
+            # same needs no ordering: every pick of ``limit`` matches
+            # is a valid top-k
+            scored = scored.orderBy(
+                *(sort_cols or []), F.col("__rt_score").desc())
+        scored = scored.limit(limit).drop(
+            *[f"__rt_toks_{fs.name}" for fs in fspecs], *ph_names,
+            *[s[0] for s in lc_specs], *getattr(self, "_rt_eltok_cols", []))
         return scored, limit, "searchScore", "__rt_score"
 
     def _rebuild_doc(self, rd: dict, coll_schema) -> dict:

@@ -1,31 +1,34 @@
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+import tempfile
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Durable ANN sidecars go to a per-run scratch root so one test run's
-# indexes can't shadow another's (tmp_path corpora get fresh fingerprints
-# anyway, but the root itself shouldn't accumulate across runs).
-if "SPARK_GRAFT_INDEX_DIR" not in os.environ:
-    import tempfile
+# Durable sidecars go to per-run scratch roots so one test run's indexes
+# can't shadow another's (tmp_path corpora get fresh fingerprints anyway,
+# but the roots themselves shouldn't accumulate across runs). A root the
+# environment already names is left to whoever set it.
+_MADE_ROOTS = []
+for _var, _prefix in (
+        ("SPARK_GRAFT_INDEX_DIR", "spark_graft_idx_test_"),
+        ("SPARK_GRAFT_TEXT_STATS_DIR", "spark_graft_txt_test_"),
+        ("SPARK_GRAFT_INTERVAL_INDEX_DIR", "spark_graft_iv_test_")):
+    if _var not in os.environ:
+        os.environ[_var] = tempfile.mkdtemp(prefix=_prefix)
+        _MADE_ROOTS.append(os.environ[_var])
 
-    os.environ["SPARK_GRAFT_INDEX_DIR"] = tempfile.mkdtemp(
-        prefix="spark_graft_idx_test_")
-if "SPARK_GRAFT_TEXT_STATS_DIR" not in os.environ:
-    import tempfile
 
-    os.environ["SPARK_GRAFT_TEXT_STATS_DIR"] = tempfile.mkdtemp(
-        prefix="spark_graft_txt_test_")
-if "SPARK_GRAFT_INTERVAL_INDEX_DIR" not in os.environ:
-    import tempfile
-
-    os.environ["SPARK_GRAFT_INTERVAL_INDEX_DIR"] = tempfile.mkdtemp(
-        prefix="spark_graft_iv_test_")
+@pytest.fixture(scope="session", autouse=True)
+def _remove_made_sidecar_roots():
+    yield
+    for d in _MADE_ROOTS:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 @pytest.fixture(scope="session")

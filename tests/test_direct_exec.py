@@ -124,16 +124,6 @@ class TestFindPath:
         f.df()
         assert f.last_exec_path == "native"
 
-    def test_native_disabled_env_routes_to_datasource(self, spark, pq_root,
-                                                      monkeypatch):
-        # the kill switch restores the pre-r12 partitioned route
-        monkeypatch.setattr(frame_mod, "DIRECT_SCAN_MAX_ROWS", 10)
-        monkeypatch.setenv("SPARK_GRAFT_NATIVE_SCAN", "0")
-        be = ParquetBackend(pq_root, id_field="k")
-        f = _mf(spark, be, "c").select("k")
-        f.df()
-        assert f.last_exec_path == "datasource"
-
     def test_forced_direct_ignores_cap(self, spark, pq_root, monkeypatch):
         monkeypatch.setattr(frame_mod, "DIRECT_SCAN_MAX_ROWS", 10)
         be = ParquetBackend(pq_root, id_field="k")

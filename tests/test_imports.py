@@ -40,7 +40,6 @@ ENV_KNOBS = {
     "SPARK_GRAFT_INTERVAL_BUCKETS",
     "SPARK_GRAFT_INTERVAL_INDEX_DIR",
     "SPARK_GRAFT_MAX_PARTITION_BYTES",
-    "SPARK_GRAFT_NATIVE_SCAN",
     "SPARK_GRAFT_TEXT_STATS_DIR",
 }
 

@@ -840,8 +840,8 @@ class TestCompoundSearchRouting:
         assert {g["_id"] for g in got} == {1, 4}
 
     @pytest.mark.parametrize("compound", [
-        # non-text must
-        {"must": [{"equals": {"path": "kind", "value": "infra"}}]},
+        # must clause outside the routed subset (type clash)
+        {"must": [{"equals": {"path": "kind", "value": 3}}]},
         # filter on an unknown field
         {"must": [{"text": {"query": "spark", "path": "body"}}],
          "filter": [{"range": {"path": "nope", "gte": 1}}]},
@@ -889,6 +889,11 @@ class TestCompoundSearchRouting:
         })
         assert {g["_id"] for g in got} == {1, 3, 5}
         assert all(g["score"] == 0.0 for g in got)
+        got = self._run(spark, tmp_path, {
+            "must": [{"equals": {"path": "kind", "value": "infra"}}],
+        })
+        assert {g["_id"] for g in got} == {1, 3, 5, 6}
+        assert all(g["score"] == 1.0 for g in got)
 
 
 class TestGeoNearRouting:
@@ -1099,13 +1104,15 @@ class TestSearchCountAndMetaRouting:
         assert got[0]["count_total"] == 4
         assert exp[0] == {"count": {"total": 4}}
 
-    def test_search_meta_phrase_falls_back(self, spark, tmp_path):
+    def test_search_meta_phrase_routes(self, spark, tmp_path):
+        # a bare phrase parses as a one-clause must, so its count rides
+        # the same aggregate as a compound's
         pipe = [{"$searchMeta": {"phrase": {"query": "spark engine",
                                             "path": "body"}}}]
         be = self._backend(tmp_path)
         mf = mongo_scan(spark, be, "main", "posts", pipeline=pipe)
         got = [r.asDict(recursive=True) for r in mf.df().collect()]
-        assert mf.last_exec_path != "routed:search_meta"
+        assert mf.last_exec_path == "routed:search_meta"
         exp = _interpreter_rows(be, "main", "posts", pipe)
         assert got[0]["count_total"] == 1
         assert exp[0] == {"count": {"total": 1}}
@@ -1222,6 +1229,100 @@ class TestPhraseAndCondOpRouting:
         assert mf.last_exec_path != "routed:search_text"
         exp = _interpreter_rows(be, "main", "posts", pipe)
         assert sorted(g["_id"] for g in got) == sorted(e["_id"] for e in exp)
+
+
+class TestBareOperatorTopK:
+    """A bare operator parses as a one-clause compound ``must`` and runs
+    the one routed ``$search`` plan. With a document-dependent score
+    (``boost.path``, ``function``) the routed top-k must be the
+    interpreter's, in order: views grow with ``_id``, so a plan that
+    keeps the first ``$limit`` matches in scan order returns the lowest
+    scores instead."""
+
+    N = 40
+    OPS = {
+        "phrase": {"query": "brown fox", "path": "body"},
+        "autocomplete": {"query": "bro", "path": "body"},
+        "range": {"path": "views", "gte": 5},
+        "equals": {"path": "kind", "value": "a"},
+        "in": {"path": "year", "value": [2001, 2003]},
+    }
+    SCORES = {
+        "boost_path": {"boost": {"path": "views"}},
+        "function": {"function": {"add": [
+            {"score": "relevance"},
+            {"path": {"value": "views", "undefined": 0}}]}},
+    }
+
+    def _backend(self, tmp_path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        ids = list(range(self.N))
+        pq.write_table(pa.table({
+            "_id": ids,
+            "body": ["the quick brown fox" if i % 2 == 0 else "a lazy dog"
+                     for i in ids],
+            "views": ids,
+            "year": [2000 + i % 5 for i in ids],
+            "kind": ["a" if i % 3 == 0 else "b" for i in ids],
+        }), str(tmp_path / "posts.parquet"))
+        return ParquetBackend(str(tmp_path), db_name="main")
+
+    def _run(self, spark, tmp_path, search, limit=3):
+        pipe = [{"$search": search}, {"$limit": limit},
+                {"$addFields": {"score": {"$meta": "searchScore"},
+                                "c": {"$meta": "count"}}},
+                {"$project": {"_id": 1, "score": 1, "total": "$c.total"}}]
+        be = self._backend(tmp_path)
+        mf = mongo_scan(spark, be, "main", "posts", pipeline=pipe)
+        got = [(r["_id"], r["score"], r["total"]) for r in mf.df().collect()]
+        exp = [(e["_id"], e["score"], e.get("total"))
+               for e in _interpreter_rows(be, "main", "posts", pipe)]
+        return mf, got, exp
+
+    @pytest.mark.parametrize("score", sorted(SCORES))
+    @pytest.mark.parametrize("op", sorted(OPS))
+    def test_doc_dependent_score_top_k(self, spark, tmp_path, op, score):
+        search = {op: {**self.OPS[op], "score": self.SCORES[score]}}
+        mf, got, exp = self._run(spark, tmp_path, search)
+        assert mf.last_exec_path == "routed:search_text"
+        assert len(exp) == 3
+        assert got == exp
+
+    @pytest.mark.parametrize("op", ["phrase", "autocomplete"])
+    def test_sort_routes(self, spark, tmp_path, op):
+        mf, got, exp = self._run(
+            spark, tmp_path, {op: self.OPS[op], "sort": {"views": -1}})
+        assert mf.last_exec_path == "routed:search_text"
+        assert got == exp == [(38, 1.0, None), (36, 1.0, None),
+                              (34, 1.0, None)]
+
+    @pytest.mark.parametrize("op", ["phrase", "autocomplete"])
+    def test_count_routes(self, spark, tmp_path, op):
+        # limit above the match count: every match returns, so the
+        # constant-score ties leave no choice of rows
+        mf, got, exp = self._run(
+            spark, tmp_path, {op: self.OPS[op], "count": {"type": "total"}},
+            limit=self.N)
+        assert mf.last_exec_path == "routed:search_text"
+        assert sorted(got) == sorted(exp)
+        assert {t for _i, _s, t in got} == {20}
+
+    @pytest.mark.parametrize("search", [
+        {"range": {"path": "views", "gte": 5}},
+        {"near": {"path": "views", "origin": 10, "pivot": 2}},
+        {"wildcard": {"path": "body", "query": "*fox*"}},
+    ])
+    def test_count_without_token_paths_declines(self, spark, tmp_path,
+                                                search):
+        # the matched total rides pass 1, which scans token columns; a
+        # tree with none has no pass 1 to carry it
+        mf, got, exp = self._run(
+            spark, tmp_path, {**search, "count": {"type": "total"}},
+            limit=self.N)
+        assert mf.last_exec_path != "routed:search_text"
+        assert sorted(got) == sorted(exp)
 
 
 class TestCompoundCondClauses:

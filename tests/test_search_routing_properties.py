@@ -171,6 +171,48 @@ class TestRandomCompoundParity:
         _parity(spark, search_backend, compound)
 
 
+def _single_op():
+    """A top-level operator, no compound around it: any compound clause
+    kind with a score modifier drawn on top (conditions get one only
+    here; a text or phrase clause keeps its own when none is drawn)."""
+    return st.builds(
+        lambda c, mod: {op: _with_mod(dict(spec), mod)
+                        for op, spec in c.items()},
+        _clause_of(_WORDS), _MOD)
+
+
+def _by_score(rows):
+    return sorted(((r["score"], r["_id"]) for r in rows),
+                  key=lambda t: (-t[0], t[1]))
+
+
+class TestSingleOperatorTopK:
+    """A ``$limit`` below the match count cuts the top-k, which the
+    compound trees above (limit 10 over 7 documents) never do. The
+    routed and interpreter top-k agree on the score list; which of the
+    documents tied at the cut-off score survive is unspecified, so ids
+    are compared above it."""
+
+    @settings(max_examples=30, deadline=None)
+    @given(op=_single_op())
+    def test_top_k_matches_interpreter(self, spark, search_backend, op):
+        docs = list(search_backend.iter_documents("main", "posts"))
+        n = len(run_pipeline(docs, [{"$search": op}]))
+        pipe = [{"$search": op}, {"$limit": max(1, n // 2)},
+                {"$addFields": {"score": {"$meta": "searchScore"}}},
+                {"$project": {"_id": 1, "score": 1}}]
+        mf = mongo_scan(spark, search_backend, "main", "posts",
+                        pipeline=pipe)
+        got = _by_score(r.asDict() for r in mf.df().collect())
+        exp = _by_score(run_pipeline(docs, pipe))
+        assert [s for s, _i in got] == [s for s, _i in exp], \
+            (op, mf.last_exec_path)
+        if got:
+            cut = got[-1][0]
+            assert [i for s, i in got if s > cut] == \
+                [i for s, i in exp if s > cut], (op, mf.last_exec_path)
+
+
 class TestMixedScriptParity:
     """r8 done-criterion: routed-vs-interpreter BIT-IDENTICAL scores
     over a mixed-script corpus (Cyrillic/Turkish/CJK/Arabic/Greek/
